@@ -444,66 +444,32 @@ object QueryCompiler {
           .toMap
     }
 
-  /** Spark's FloatType comparison (SQLOrderingUtil.compareFloats): IEEE
-    * equality first — so −0.0 and +0.0 compare EQUAL, exactly like the
-    * codegen sort — then java.lang.Float.compare (NaN greatest). The
-    * driver-side rank replays below must use THIS, not Float.compare
-    * alone, or a −0.0/+0.0 tie would order differently than the plan it
-    * replaces.
-    */
-  private[engine] def sparkFloatCmp(a: Float, b: Float): Int =
-    if (a == b) 0 else java.lang.Float.compare(a, b)
-
-  /** Spark's StringType comparison (UTF8String.binaryCompare): unsigned
-    * UTF-8 bytes. JVM String.compareTo is UTF-16 code-unit order, which
-    * disagrees for supplementary characters (the TopKStrAgg rule).
-    */
-  private[engine] def sparkStrCmp(a: String, b: String): Int =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Exact re-rank of a walk pool WITHOUT touching the collection — and
-    * (round 13) without a Spark job: the candidates' (id, vector) pairs
-    * are ALREADY in driver memory (≤ searchSize rows — the walk fetched
-    * them), so ranking them through a LocalRelation→Sort→Limit plan
-    * bought nothing but one job's scheduling latency per request, the
-    * dominant term of the local serving floor (round-12 "not yet
-    * optimized" #2). The rank now runs driver-side and the compiled
-    * frame is a PRE-RANKED LocalRelation (zero jobs to consume;
-    * Search.assemble's metadata-only page stays job-free too).
+  /** Exact re-rank of a walk pool WITHOUT touching the collection and
+    * without a Spark job: the candidates' (id, vector) pairs are ALREADY
+    * in driver memory (≤ searchSize rows — the walk fetched them), so the
+    * distances are scored driver-side and the rank is Spark's own
+    * `orderBy(_distance, _id).limit` over a LocalRelation, which
+    * [[LocalFold]] folds back into a LocalRelation — consuming the frame
+    * (and Search's metadata-only page over it) runs ZERO jobs.
     *
-    * Bit-identical to the plan it replaces, term by term:
-    *   - distance: [[graft.functions.VectorDistance.scalarDistance]] is
-    *     the SAME kernel formulation the codegen expression compiles
-    *     (three co-located formulations, one edit point — the walk
-    *     already scores hops with it), and `.toFloat` is the same
-    *     double→float rounding as `cast(FloatType)`;
-    *   - hybrid: `(-1.0f * w) * d` in float replays the old
-    *     `Multiply(Multiply(-1f, w), dist)` column left-assoc exactly;
-    *   - order: (distance asc, id asc) under Spark's float comparator
-    *     ([[sparkFloatCmp]]) and UTF-8 binary id tie-break
-    *     ([[sparkStrCmp]]).
-    * EngineSpec's "driver-side re-rank ≡ expression re-rank" law pins
-    * the equivalence per metric, ties and weights included.
+    * The scores equal the distance expression's:
+    * [[graft.functions.VectorDistance.scalarDistance]] is the SAME kernel
+    * formulation the codegen expression compiles (three co-located
+    * formulations, one edit point — the walk already scores hops with
+    * it), `.toFloat` is the same double→float rounding as
+    * `cast(FloatType)`, and `(-1.0f * w) * d` in float is the
+    * `Multiply(Multiply(-1f, w), dist)` column left-assoc. EngineSpec's
+    * "driver-side re-rank ≡ expression re-rank" law pins it per metric,
+    * ties and weights included.
     */
   private[graft] def vamanaRerank(
       metric: IndexKind.Metric, vector: Seq[Float], limit: Int, w: Float,
       cand: Seq[(String, Seq[Float])], spark: org.apache.spark.sql.SparkSession): Compiled = {
+    LocalFold.register(spark)
     val q = vector.toArray
-    val scored = cand.map { case (id, v) =>
-      (id, graft.functions.VectorDistance
-        .scalarDistance(metric, v.toArray, q).toFloat)
-    }
-    val ord = new Ordering[(String, Float)] {
-      def compare(x: (String, Float), y: (String, Float)): Int = {
-        val c = sparkFloatCmp(x._2, y._2)
-        if (c != 0) c else sparkStrCmp(x._1, y._1)
-      }
-    }
-    val top = scored.sorted(ord).take(limit)
     val c0 = -1.0f * w // the constant-folded Multiply(-1f, w)
-    val rows: Seq[org.apache.spark.sql.Row] = top.map { case (id, d) =>
+    val rows: Seq[org.apache.spark.sql.Row] = cand.map { case (id, v) =>
+      val d = graft.functions.VectorDistance.scalarDistance(metric, v.toArray, q).toFloat
       org.apache.spark.sql.Row(id, d, null, c0 * d)
     }
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
@@ -513,8 +479,8 @@ object QueryCompiler {
     val schema = StructType(Seq(
       StructField(IdCol, StringType), StructField(DistanceCol, FloatType),
       StructField(ScoreCol, FloatType), StructField(HybridScoreCol, FloatType)))
-    val ranked = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+    val ranked = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .orderBy(col(DistanceCol).asc, col(IdCol).asc).limit(limit)
     Compiled(Ids(ranked.select(IdCol)), Some(ranked), setFromRanked = true)
   }
 

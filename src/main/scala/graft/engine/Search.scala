@@ -230,21 +230,10 @@ object Search {
         // request (the flagship QPS floor after the candidate-bounded
         // re-rank landed). A select that resolves to NO data column
         // (`["_id"]`, or only unknown paths — which project() silently
-        // drops) is metadata-only in the same sense.
-        //
-        // Round 13: when ranked is ALREADY a driver-local relation (the
-        // graph family's pre-ranked re-rank, the fused text batch) the
-        // remaining default-order page — orderBy(hybrid desc, id asc) +
-        // offset/limit + meta projection — is a per-request Spark job
-        // over ≤75 local rows, i.e. the last job on the local serving
-        // path (round-12 "not yet optimized" #2). Replay it driver-side
-        // and return a finished LocalRelation: consuming it runs ZERO
-        // jobs. Non-local ranked frames (exact corpus top-k) fall
-        // through to the shared lazy pipeline unchanged.
-        localMetaPage(ranked, req) match {
-          case Some(done) => return done
-          case None => ranked
-        }
+        // drops) is metadata-only in the same sense. When ranked is a
+        // driver-local relation (the graph re-rank, the fused text
+        // batch) the page below folds to one too (LocalFold): zero jobs.
+        ranked
       case Some(ranked) if compiled.setFromRanked && col0.pointLookup.isDefined =>
         // leaf case with select/sort on a STORE-served collection: the set
         // IS the ranked ids, bounded by the per-index limit (≤75,
@@ -279,6 +268,16 @@ object Search {
           .withColumn(HybridScoreCol, coalesce(col(HybridScoreCol), lit(0.0f)))
     }
 
+    page(withScores, req, col0.df.schema)
+  }
+
+  /** The shared tail of every search: sort → offset/limit → select.
+    * Registers [[LocalFold]] on the frame's session, so a page over a
+    * driver-local frame plans as a job-free LocalTableScan.
+    */
+  private[graft] def page(
+      withScores: DataFrame, req: SearchRequest, dataSchema: StructType): DataFrame = {
+    LocalFold.register(withScores.sparkSession)
     // Default order: hybrid score desc (ranked first), id asc tie-break —
     // the multi-shard merge semantics (cluster/actions.go:361–363).
     // Explicit sort: missing values last regardless of direction
@@ -293,59 +292,8 @@ object Search {
         withScores.orderBy(keys: _*)
     }
 
-    val page = ordered.offset(req.offset).limit(req.limit)
-    project(page, col0.df.schema, req.select)
+    project(ordered.offset(req.offset).limit(req.limit), dataSchema, req.select)
   }
-
-  /** The metadata-only default-order page, replayed driver-side over a
-    * ranked frame whose OPTIMIZED plan is a LocalRelation (the graph
-    * family's pre-ranked re-rank, the fused text batch's per-request
-    * frames — ConvertToLocalRelation folds their projections) — None for
-    * any distributed ranked plan, which keeps the shared lazy pipeline.
-    *
-    * Replays Spark's semantics exactly:
-    *   - `orderBy(_hybridScore desc, _id asc)`: desc defaults to NULLS
-    *     LAST; float comparison is [[QueryCompiler.sparkFloatCmp]]
-    *     (−0.0 = +0.0, NaN greatest — FIRST under desc); the id
-    *     tie-break is UTF-8 binary ([[QueryCompiler.sparkStrCmp]]);
-    *   - `offset(n).limit(m)`: drop n, take m;
-    *   - metadata projection: the four MetaCols in order, with the
-    *     source frame's own field types/nullability.
-    * `ranked.collect()` on a LocalRelation plan is
-    * LocalTableScanExec.executeCollect — no job is ever launched.
-    */
-  private[graft] def localMetaPage(ranked: DataFrame, req: SearchRequest): Option[DataFrame] =
-    ranked.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val schema = ranked.schema
-        // a ranked frame always carries exactly the four meta columns,
-        // but resolve defensively — an unexpected shape keeps the lazy path
-        if (!MetaCols.forall(schema.fieldNames.contains)) return None
-        val rows = ranked.collect()
-        val hIdx = schema.fieldIndex(HybridScoreCol)
-        val idIdx = schema.fieldIndex(IdCol)
-        val ord = new Ordering[org.apache.spark.sql.Row] {
-          def compare(x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row): Int = {
-            val xn = x.isNullAt(hIdx); val yn = y.isNullAt(hIdx)
-            val c =
-              if (xn && yn) 0
-              else if (xn) 1 // nulls last under desc
-              else if (yn) -1
-              else -QueryCompiler.sparkFloatCmp(x.getFloat(hIdx), y.getFloat(hIdx))
-            if (c != 0) c
-            else QueryCompiler.sparkStrCmp(x.getString(idIdx), y.getString(idIdx))
-          }
-        }
-        val paged = rows.sorted(ord).drop(req.offset).take(req.limit)
-        val metaIdx = MetaCols.map(schema.fieldIndex)
-        val outRows: Seq[org.apache.spark.sql.Row] = paged.toSeq.map { r =>
-          org.apache.spark.sql.Row(metaIdx.map(i => if (r.isNullAt(i)) null else r.get(i)): _*)
-        }
-        val outSchema = StructType(metaIdx.map(i => schema.fields(i)))
-        Some(ranked.sparkSession.createDataFrame(
-          java.util.Arrays.asList(outRows: _*), outSchema))
-      case _ => None
-    }
 
   /** True when the request's projection needs no data column beyond the
     * metadata the ranked frame already carries: empty select, or a select

@@ -311,13 +311,13 @@ final class CollectionStore(
     // batch at 10k rows, so it fits by construction (the id collect below
     // was already driver-bounded). LOCAL plans — the wire path's
     // createDataFrame point batches, literal toDF frames — yield their
-    // rows with ZERO jobs (localHeadRows, the update path's rule);
+    // rows with ZERO jobs (Spark folds Limit/Project over a LocalRelation);
     // distributed inputs pay ONE bounded collect instead of the previous
     // localCheckpoint + id-collect job pair. Either way the single row
     // snapshot feeds the checks AND the delta write, so non-deterministic
     // sources (uuid ids, samples) still see one evaluation.
     val normalized = normalize(points)
-    val rows = localHeadRows(normalized, MaxInsertBatch + 1)
+    val rows = normalized.limit(MaxInsertBatch + 1).collect()
     val n = rows.length.toLong
     require(n <= MaxInsertBatch, s"insert batch exceeds $MaxInsertBatch points")
     val idIdx = normalized.schema.fieldIndex(IdCol)
@@ -491,24 +491,8 @@ final class CollectionStore(
     updateCommitted(name, updates).length.toLong
 
   /** As [[update]], returning the matched (committed) ids. */
-  /** The first `n` rows of a batch WITHOUT a job when the plan is local
-    * (the wire path: point batches are parsed driver-side and arrive as
-    * `createDataFrame(rows)` local relations — scheduling a cluster job
-    * to read back ≤100 rows the driver already holds puts a scheduler
-    * round-trip on every point-write's latency). Genuinely distributed
-    * inputs still collect through the engine.
-    */
-  private def localHeadRows(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
-    df.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(df.schema)
-        lr.data.take(n).map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
-      case _ => df.limit(n).collect()
-    }
-
   private[graft] def updateCommitted(name: String, updates: DataFrame): Seq[String] = {
-    val batchRows = localHeadRows(updates, MaxUpdateBatch + 1)
+    val batchRows = updates.limit(MaxUpdateBatch + 1).collect()
     require(batchRows.length <= MaxUpdateBatch, s"update batch exceeds $MaxUpdateBatch points")
     val uSchema = updates.schema
     require(uSchema.fieldNames.contains(IdCol), s"updates must carry $IdCol")

@@ -126,10 +126,14 @@ class EngineSpec extends SparkSuite {
     // (CollapseProject won't merge through the non-cheap distance
     // expression) — and the metadata-only serving shape paid a
     // range-partitioned GLOBAL sort of the whole corpus per request.
-    val df = Search.search(fixture, SearchRequest(
+    // The toDF fixture is a driver-local relation, which LocalFold ranks
+    // without a job; the partial top-k is pinned on a distributed copy.
+    val req = SearchRequest(
       Query("flat", vectorFlat = Some(VectorFlatOpts(Seq(5f, 6f), Op.Near, 10))),
-      limit = 100))
-    val physical = df.queryExecution.executedPlan.toString
+      limit = 100)
+    def physicalOf(c: Collection) = Search.search(c, req).queryExecution.executedPlan.toString
+    assert(physicalOf(fixture).startsWith("LocalTableScan"))
+    val physical = physicalOf(fixture.copy(df = fixture.df.repartition(4)))
     assert(physical.contains("TakeOrderedAndProject"), physical)
     assert(!physical.contains("rangepartitioning"), physical)
   }
@@ -233,26 +237,50 @@ class EngineSpec extends SparkSuite {
     bad(SearchRequest(Query("flat", vectorFlat = Some(VectorFlatOpts(Seq(1f, 2f, 3f), Op.Near, 10))), limit = 10))
   }
 
+  // The two laws below compare a frame LocalFold folds (built by the
+  // engine, which registers the rule on this session — built without
+  // GraftExtensions) with the same frame on a new session, where the rule
+  // is not registered and Spark sorts it in a job.
+  private lazy val plain = {
+    val s = spark.newSession()
+    assert(s.experimental.extraOptimizations.isEmpty)
+    s
+  }
+
+  private def assertFolded(df: org.apache.spark.sql.DataFrame, jobs: Int, clue: String): Unit = {
+    assert(df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], clue)
+    assert(jobs == 0, s"$clue: $jobs jobs")
+  }
+
+
   test("driver-side vamana re-rank ≡ the expression re-rank it replaced (round 13)") {
     import graft.engine.QueryCompiler
     import graft.functions.Distances
-    // ties (duplicate vectors), a −0.0-producing dot row, and ids whose
+    // ties (duplicate vectors), a −0.0-producing dot row, ids whose
     // UTF-16 and UTF-8 orders DISAGREE (U+FFFD sorts before U+1F600 in
-    // UTF-8 bytes but after its surrogate pair in UTF-16 code units)
+    // UTF-8 bytes but after its surrogate pair in UTF-16 code units), a
+    // null id tied with "a"/"b", and a NaN distance
     val cand: Seq[(String, Seq[Float])] = Seq(
       ("b", Seq(1f, 2f)), ("a", Seq(1f, 2f)),
       ("�", Seq(3f, 1f)), ("😀", Seq(3f, 1f)),
       ("z", Seq(0f, 0f)),
-      ("m", Seq(-2f, 5f)))
+      ("m", Seq(-2f, 5f)),
+      (null, Seq(1f, 2f)), ("nan", Seq(java.lang.Float.NaN, 1f)))
     val metrics = Seq(Metric.Euclidean, Metric.Cosine, Metric.Dot,
       Metric.Hamming, Metric.Jaccard, Metric.Haversine)
     for (metric <- metrics; w <- Seq(1.0f, 0.25f); limit <- Seq(3, 10)) {
-      val got = QueryCompiler.vamanaRerank(metric, Seq(1f, 1f), limit, w, cand, spark)
-        .ranked.get
+      val clue = s"$metric w=$w limit=$limit"
+      val ((got, gotRows), jobs) = countJobs("graft-rerank-law") {
+        val f = QueryCompiler.vamanaRerank(metric, Seq(1f, 1f), limit, w, cand, spark)
+          .ranked.get
+        (f, f.collect().toSeq)
+      }
+      assertFolded(got, jobs, clue)
       // the replaced formulation, inline: LocalRelation → distance
       // expression → score projection → orderBy → limit
       val d = Distances.distanceToQuery(metric, col("_vec"), Seq(1f, 1f)).cast("float")
-      val want = cand.toDF("_id", "_vec")
+      val want = plain.createDataFrame(cand).toDF("_id", "_vec")
         .select(col("_id"), d.as("_distance"))
         .select(col("_id"), col("_distance"),
           lit(null).cast("float").as("_score"),
@@ -260,8 +288,8 @@ class EngineSpec extends SparkSuite {
         .orderBy(col("_distance").asc, col("_id").asc)
         .limit(limit)
       assert(got.schema.map(f => (f.name, f.dataType, f.nullable)) ==
-        want.schema.map(f => (f.name, f.dataType, f.nullable)), s"$metric w=$w")
-      assert(got.collect().toSeq == want.collect().toSeq, s"$metric w=$w limit=$limit")
+        want.schema.map(f => (f.name, f.dataType, f.nullable)), clue)
+      assert(gotRows == want.collect().toSeq, clue)
     }
   }
 
@@ -270,31 +298,34 @@ class EngineSpec extends SparkSuite {
     import org.apache.spark.sql.types.{StructType, StructField, StringType, FloatType}
     // a ranked-shaped LOCAL relation with the tricky orderings: hybrid
     // ties broken by UTF-8 id order, −0.0/+0.0 comparing EQUAL, a null
-    // hybrid (desc → nulls last)
+    // hybrid (desc → nulls last), a NaN hybrid (greatest → first under
+    // desc) and a null id tied with "a"/"b" (nulls first under asc)
     val schema = StructType(Seq(
       StructField("_id", StringType), StructField("_distance", FloatType),
       StructField("_score", FloatType), StructField("_hybridScore", FloatType)))
-    val rows: Seq[Row] = Seq(
+    val rows = java.util.Arrays.asList[Row](
       Row("b", 1.0f, null, -1.0f), Row("a", 1.0f, null, -1.0f),
       Row("n", 2.0f, null, null),
       Row("�", 0.5f, null, 0.0f), Row("😀", 0.5f, null, -0.0f),
-      Row("z", 3.0f, null, -2.5f))
-    val ranked = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    for (offset <- Seq(0, 2); limit <- Seq(3, 10)) {
+      Row("z", 3.0f, null, -2.5f),
+      Row(null, 1.0f, null, -1.0f), Row("nan", 0.1f, null, java.lang.Float.NaN))
+    val ranked = spark.createDataFrame(rows, schema)
+    // offset 9 is past the 8 rows: an empty page
+    for (offset <- Seq(0, 2, 9); limit <- Seq(3, 10)) {
+      val clue = s"off=$offset lim=$limit"
       val req = SearchRequest(Query("x"), offset = offset, limit = limit)
-      val got = Search.localMetaPage(ranked, req)
-      assert(got.isDefined, "LocalRelation ranked frame must take the local page")
-      val want = ranked
+      val ((got, gotRows), jobs) = countJobs("graft-page-law") {
+        val f = Search.page(ranked, req, schema)
+        (f, f.collect().toSeq)
+      }
+      assertFolded(got, jobs, clue)
+      val want = plain.createDataFrame(rows, schema)
         .orderBy(col("_hybridScore").desc, col("_id").asc)
         .offset(offset).limit(limit)
         .select(col("_id"), col("_distance"), col("_score"), col("_hybridScore"))
-      assert(got.get.collect().toSeq == want.collect().toSeq, s"off=$offset lim=$limit")
-      assert(got.get.schema == want.schema, s"off=$offset lim=$limit")
+      assert(gotRows == want.collect().toSeq, clue)
+      assert(got.schema == want.schema, clue)
     }
-    // a non-local ranked plan (sort+limit not yet collapsed) keeps the
-    // shared lazy pipeline
-    val lazyRanked = ranked.orderBy(col("_distance").asc).limit(3)
-    assert(Search.localMetaPage(lazyRanked, SearchRequest(Query("x"))).isEmpty)
   }
 
   test("schema validation: reserved property names and NaN bounds fail closed") {
