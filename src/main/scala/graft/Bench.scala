@@ -1,38 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // runAsStream (q7_stream_window) hard-requires UTC; without this the
-      // bench would -1 that query on any host whose JVM default isn't UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Joins: let the planner pick shuffled-hash over sort-merge when the
-      // build side fits (filter-set semi-joins on _id otherwise SMJ-sort
-      // the WIDE candidate stream per request — the same never-sort-the-
-      // payload-stream rule the dedup verify joins learned at 100×), and
-      // let AQE rewrite a planned SMJ to SHJ from REAL post-shuffle
-      // partition sizes. Both parameterized: a cluster profile re-tunes
-      // via env. Caveat (round-12 advice): preferSortMergeJoin=false
-      // changes the STATIC planner choice from ESTIMATED sizes, and a
-      // shuffled-hash build map does not spill — a badly underestimated
-      // or skewed build side can OOM where SMJ would not. The AQE
-      // threshold path is the safe half (it decides from REAL partition
-      // sizes and stops applying past 64m); a memory-tight cluster
-      // profile should set SPARK_GRAFT_PREFER_SMJ=true and rely on the
-      // AQE rewrite alone. The engine's own bounded-build joins are
-      // explicit (broadcast()/shuffle_hash hints), so they don't depend
-      // on this session default either way.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // optional comma-separated subset for local iteration (absent = all)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

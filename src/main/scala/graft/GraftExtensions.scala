@@ -10,7 +10,7 @@ import graft.model.IndexKind.Metric
   * functions, so plain `spark.sql` can use them:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
+  *   val spark = Sessions.local("spark.sql.extensions" -> classOf[GraftExtensions].getName)
   *   spark.sql("SELECT vector_distance_cosine(a, b) FROM t")
   * }}}
   *

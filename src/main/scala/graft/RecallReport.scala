@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Distances
 import graft.model.IndexKind.Metric
@@ -14,13 +13,7 @@ import graft.operators.{BinaryQuantizer, IvfPq, ProductQuantizer, ScalarQuantize
 object RecallReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     import spark.implicits._
 
     val emb = Tables.embeddings(spark, sfDir).persist()
@@ -148,7 +141,7 @@ object RecallReport {
     // ADC and the rescored production mode, at two probe budgets
     val ivfPqCoarse = IvfPq.kmeansCoarse(emb, col("embedding"), k = 32)
     val ivfPqModel = IvfPq.fitResidualPq(emb, col("embedding"), ivfPqCoarse, m = 16, k = 16)
-    val ivfPqDir = java.nio.file.Files.createTempDirectory("graft_recall_ivfpq_").toString
+    val ivfPqDir = Fs.tempDir("graft_recall_ivfpq_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), ivfPqCoarse, ivfPqModel, ivfPqDir)
     def ivfPqAt(nprobe: Int, rescore: Int): Seq[Set[Long]] = queryIds.map { q =>
       IvfPq.searchArtifact(spark, ivfPqDir, vec(q), ivfPqCoarse, ivfPqModel,
@@ -162,7 +155,7 @@ object RecallReport {
     // spill=2 (multi-assignment): each vector's residual codes live in its
     // 2 nearest cells — coarse-cell coverage is the recall ceiling, and
     // spilling converts boundary misses into hits at the same probe budget
-    val ivfPqDirS = java.nio.file.Files.createTempDirectory("graft_recall_ivfpq_s2_").toString
+    val ivfPqDirS = Fs.tempDir("graft_recall_ivfpq_s2_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), ivfPqCoarse, ivfPqModel,
       ivfPqDirS, spill = 2)
     def ivfPqSpillAt(nprobe: Int, rescore: Int): Seq[Set[Long]] = queryIds.map { q =>
@@ -172,7 +165,7 @@ object RecallReport {
     }
     val ivfPqS4R = ivfPqSpillAt(nprobe = 4, rescore = rescoreC)
     val ivfPqS8R = ivfPqSpillAt(nprobe = 8, rescore = rescoreC)
-    val ivfPqDirS3 = java.nio.file.Files.createTempDirectory("graft_recall_ivfpq_s3_").toString
+    val ivfPqDirS3 = Fs.tempDir("graft_recall_ivfpq_s3_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), ivfPqCoarse, ivfPqModel,
       ivfPqDirS3, spill = 3)
     val ivfPqS38R = queryIds.map { q =>
@@ -235,7 +228,7 @@ object RecallReport {
       graft.model.IndexSchema(
         "vec_l2" -> graft.model.IndexKind.VectorVamana(64, Metric.Euclidean)))
       .withVamanaVectorIndex("vec_l2",
-        java.nio.file.Files.createTempDirectory("graft_recall_vamana_")
+        Fs.tempDir("graft_recall_vamana_")
           .resolve("art").toString)
     val vamServed = queryIds.map { q =>
       graft.engine.Search.search(vamColl, graft.model.SearchRequest(

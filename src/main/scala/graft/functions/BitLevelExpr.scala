@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * (BinaryQuantizer.asymmetricDistance): one tree node with a primitive
   * loop over packed sign words, replacing the dim-term CASE chain — the
   * same Catalyst-tree-walk collapse as [[SqReconDistance]], same measured
-  * motivation (tools/TimeProbe). Per dimension the two possible squared
+  * motivation. Per dimension the two possible squared
   * residuals (query − level)² are driver-side constants; the row
   * contributes `bit ? b2(i) : a2(i)`, bits read LSB-first from
   * `packed(i/64) >> (i%64)`, terms summed in index order — bit-identical

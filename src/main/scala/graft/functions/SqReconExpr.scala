@@ -14,8 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `+`) was CORRECT but made every request pay Catalyst, not execution:
   * analyzer/optimizer rule walks over a ~400-node tree per query — and
   * the batched flat scan multiplies that by K — measured ~3.5 s of
-  * per-request plan time at bench scale (tools/TimeProbe.scala) against
-  * ~0.4 s of execution. One node with embedded (lo, step, query) arrays
+  * per-request plan time at bench scale against ~0.4 s of execution. One node with embedded (lo, step, query) arrays
   * collapses the tree; the generated code is the same tight loop
   * whole-stage codegen produced for the chain, minus the tree walks.
   *

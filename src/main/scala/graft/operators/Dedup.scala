@@ -256,11 +256,10 @@ object Dedup {
     * this operator survive a 1000× corpus.
     */
   /** Postings + PPJoin prefix frame from a shingled `base`
-    * (`_pid`, `_sh`, `_cnt`) — THE prefix derivation, shared with the
-    * ScaleDebug stage-size diagnostic so the tool can never drift from
-    * the operator it diagnoses. Returns (postings, prefix postings).
+    * (`_pid`, `_sh`, `_cnt`) — THE prefix derivation. Returns (postings,
+    * prefix postings).
     */
-  private[graft] def prefixStage(
+  private def prefixStage(
       base: DataFrame, threshold: Double,
       maxShingleDf: Option[Int]): (DataFrame, DataFrame) = {
     val posts = base.select(col("_pid"), col("_cnt"), explode(col("_sh")).as("_s"))

@@ -516,9 +516,9 @@ object ScalarQuantizer {
 
   /** One loop node (functions/SqReconExpr.scala) instead of a dim-term
     * literal chain: the chain made Catalyst tree walks, not execution,
-    * the dominant request cost (~400 nodes/query; measured via
-    * tools/TimeProbe). Arithmetic and null semantics are bit-identical —
-    * QuantizerSpec pins the law against [[approxDistanceChain]].
+    * the dominant request cost (~400 nodes/query). Arithmetic and null
+    * semantics are bit-identical — QuantizerSpec pins the law against
+    * [[approxDistanceChain]].
     */
   private def reconExpr(codes: Column, query: Seq[Float],
       lo: Array[Double], hi: Array[Double], negDot: Boolean): Column = {

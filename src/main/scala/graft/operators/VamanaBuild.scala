@@ -91,15 +91,27 @@ object VamanaBuild {
   private def dist(metric: Metric, a: Array[Float], b: Array[Float]): Double =
     graft.functions.VectorDistance.scalarDistance(metric, a, b)
 
+  /** Run `body` with a `persist` that records each frame it caches, and
+    * release them all, newest first, when `body` returns or throws. A
+    * failed build must not leave CacheManager entries behind: they live as
+    * long as the session, and their lineage keeps the build's shuffle
+    * files on disk.
+    */
+  private[graft] def withPersisted[A](body: (DataFrame => DataFrame) => A): A = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => held += df.persist(); df }
+    finally held.reverseIterator.foreach(_.unpersist(false))
+  }
+
   /** Build the graph. `df` must expose a LONG id and an array<float>
     * vector; output is (id, neighbors array<long>) — one row for EVERY
     * input node (a singleton corpus yields its node with [] neighbors).
     */
   def build(
       df: DataFrame, id: Column, vec: Column,
-      metric: Metric, params: Params = Params()): DataFrame = {
+      metric: Metric, params: Params = Params()): DataFrame = withPersisted { persist =>
     val spark = df.sparkSession
-    val vecs = df.select(id.cast("long").as("id"), vec.as("vec")).persist()
+    val vecs = persist(df.select(id.cast("long").as("id"), vec.as("vec")))
 
     // init = ring over the rank order (connectivity backbone) + per-node
     // deterministic pseudo-random LONG-RANGE links (md5-derived offsets).
@@ -122,11 +134,10 @@ object VamanaBuild {
     // goldenable artifact — the driver entry hash-compares it.
     val ranked = {
       import spark.implicits._
-      vecs.select(col("id")).as[Long].rdd
+      persist(vecs.select(col("id")).as[Long].rdd
         .sortBy(identity)
         .zipWithIndex()
-        .toDF("id", "_r")
-        .persist()
+        .toDF("id", "_r"))
     }
     val n = ranked.count()
     // Ring and long-range links share one explode + ONE rank join: `ranked`
@@ -181,12 +192,11 @@ object VamanaBuild {
       val nn2 = sampled.as("e1")
         .join(sampled.as("e2"), col("e1.dst") === col("e2.src"))
         .select(col("e1.src").as("src"), col("e2.dst").as("dst"))
-      edges = cappedCandidates(undirected.union(nn2), vecs, metric, params)
+      edges = persist(cappedCandidates(undirected.union(nn2), vecs, metric, params)
         .join(vecs.select(col("id").as("dst"), col("vec").as("_dv")), "dst")
         .groupBy("src")
         .agg(pruneUdf(collect_list(struct(col("_d"), col("dst"), col("_dv")))).as("_nbrs"))
-        .select(col("src"), explode(col("_nbrs")).as("dst"))
-        .persist()
+        .select(col("src"), explode(col("_nbrs")).as("dst")))
       edges.count() // materialize before releasing the previous round's cache
       prevRound.foreach(_.unpersist(false))
       prevRound = Some(edges)
@@ -195,14 +205,10 @@ object VamanaBuild {
     // pruned graph ∪ ring backbone (connectivity by construction); the
     // dedup folds into the per-node aggregation (array_distinct over the
     // sorted list) instead of paying a separate distinct shuffle.
-    // Materialize eagerly (truncating the iteration lineage), then release
-    // every intermediate cache — builds must not accumulate storage.
-    val result = toAdjacency(edges.union(ring), vecs.select(col("id").as("src")))
+    // Materialize eagerly (truncating the iteration lineage);
+    // withPersisted then releases every intermediate cache.
+    toAdjacency(edges.union(ring), vecs.select(col("id").as("src")))
       .localCheckpoint()
-    prevRound.foreach(_.unpersist(false))
-    ranked.unpersist(false)
-    vecs.unpersist(false)
-    result
   }
 
   /** Fold an edge list into the artifact schema, keeping one row for
@@ -314,8 +320,9 @@ object VamanaBuild {
     */
   def insertBatch(
       graph: DataFrame, allVecs: DataFrame, id: Column, vec: Column,
-      newIds: DataFrame, metric: Metric, params: Params = Params()): DataFrame = {
-    val vecs = allVecs.select(id.cast("long").as("id"), vec.as("vec")).persist()
+      newIds: DataFrame, metric: Metric,
+      params: Params = Params()): DataFrame = withPersisted { persist =>
+    val vecs = persist(allVecs.select(id.cast("long").as("id"), vec.as("vec")))
     val nids = newIds.select(col(newIds.columns.head).cast("long").as("id"))
     val newPts = vecs.join(nids, "id")
     val pruneUdf = mkPruneUdf(metric, params)
@@ -326,12 +333,11 @@ object VamanaBuild {
       .filter(col("query_id") =!= col("corpus_id"))
       .select(col("query_id").as("src"), col("corpus_id").as("dst"),
         col("distance").as("_d"))
-    val newEdges = cand
+    val newEdges = persist(cand
       .join(vecs.select(col("id").as("dst"), col("vec").as("_dv")), "dst")
       .groupBy("src")
       .agg(pruneUdf(collect_list(struct(col("_d"), col("dst"), col("_dv")))).as("_nbrs"))
-      .select(col("src"), explode(col("_nbrs")).as("dst"))
-      .persist()
+      .select(col("src"), explode(col("_nbrs")).as("dst")))
     newEdges.count()
 
     val backlinks = newEdges.select(col("dst").as("src"), col("src").as("dst"))
@@ -351,19 +357,14 @@ object VamanaBuild {
     // every node — existing and new — must keep an adjacency row: a new
     // point with no usable neighbors (empty/singleton base graph) would
     // otherwise silently never enter the graph
-    val edgesAll = baseAdj.join(affected, Seq("src"), "left_anti")
+    val edgesAll = persist(baseAdj.join(affected, Seq("src"), "left_anti")
       .union(repruned)
-      .distinct()
-      .persist()
+      .distinct())
     val requiredIds = graph.select(col("id").cast("long").as("src"))
       .union(nids.select(col("id").as("src")))
       .distinct()
-    val result = toAdjacency(withReattached(edgesAll, requiredIds), requiredIds)
+    toAdjacency(withReattached(edgesAll, requiredIds), requiredIds)
       .localCheckpoint()
-    edgesAll.unpersist(false)
-    newEdges.unpersist(false)
-    vecs.unpersist(false)
-    result
   }
 
   /** Incremental batch delete (reference vamana.go removePoint semantics):
@@ -375,9 +376,10 @@ object VamanaBuild {
     */
   def deleteBatch(
       graph: DataFrame, allVecs: DataFrame, id: Column, vec: Column,
-      deletedIds: DataFrame, metric: Metric, params: Params = Params()): DataFrame = {
-    val vecs = allVecs.select(id.cast("long").as("id"), vec.as("vec")).persist()
-    val del = deletedIds.select(col(deletedIds.columns.head).cast("long").as("_del")).persist()
+      deletedIds: DataFrame, metric: Metric,
+      params: Params = Params()): DataFrame = withPersisted { persist =>
+    val vecs = persist(allVecs.select(id.cast("long").as("id"), vec.as("vec")))
+    val del = persist(deletedIds.select(col(deletedIds.columns.head).cast("long").as("_del")))
     val pruneUdf = mkPruneUdf(metric, params)
 
     val adjE = graph.select(col("id").cast("long").as("src"),
@@ -410,18 +412,13 @@ object VamanaBuild {
     // persist: the edge set feeds the re-attach anchor lookup, the
     // missing-node anti-join, and the final union — three evaluations of
     // the prune subtree without it
-    val edgesAll = keepEdges.join(affected, Seq("src"), "left_anti")
+    val edgesAll = persist(keepEdges.join(affected, Seq("src"), "left_anti")
       .union(repruned)
-      .distinct()
-      .persist()
+      .distinct())
     val survivors = graph.select(col("id").cast("long").as("src"))
       .join(del.withColumnRenamed("_del", "src"), Seq("src"), "left_anti")
-    val result = toAdjacency(withReattached(edgesAll, survivors), survivors)
+    toAdjacency(withReattached(edgesAll, survivors), survivors)
       .localCheckpoint()
-    edgesAll.unpersist(false)
-    del.unpersist(false)
-    vecs.unpersist(false)
-    result
   }
 
   /** Greedy beam search over a collected adjacency (serving-side

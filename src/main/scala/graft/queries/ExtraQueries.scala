@@ -79,7 +79,7 @@ object ExtraQueries {
       |ORDER BY d.source, e.label""".stripMargin) { (s, d) =>
     import graft.operators.Bucketing
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val base = java.nio.file.Files.createTempDirectory("graft_bucketed_").toString
+    val base = graft.Fs.tempDir("graft_bucketed_").toString
     val docsT = s"graft_docs_$tag"
     val embT = s"graft_emb_$tag"
     // finally-cleanup: a failure anywhere must not strand catalog entries
@@ -147,7 +147,7 @@ object ExtraQueries {
        |GROUP BY user_id % 16
        |ORDER BY ub""".stripMargin) { (s, d) =>
     import graft.operators.Bucketing
-    val base = java.nio.file.Files.createTempDirectory("graft_partitioned_").toString
+    val base = graft.Fs.tempDir("graft_partitioned_").toString
     try {
       Bucketing.writePartitioned(Tables.events(s, d), s"$base/events", "event_type")
       s.read.parquet(s"$base/events")
@@ -230,7 +230,7 @@ object ExtraQueries {
     """SELECT doc_id AS id, lang, source, n_chars, TRUE AS skipped_some
       |FROM documents WHERE doc_id IN (42, 123, 444)
       |ORDER BY id""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_skip_").toString
+    val dir = graft.Fs.tempDir("graft_skip_").toString
     Tables.documents(s, d)
       .repartitionByRange(16, col("doc_id")).sortWithinPartitions("doc_id")
       .write.mode("overwrite").parquet(s"$dir/docs")
@@ -258,7 +258,7 @@ object ExtraQueries {
     """SELECT event_id AS id, user_id, event_type, TRUE AS skipped_some
       |FROM events WHERE user_id >= 100 AND user_id <= 120
       |ORDER BY id""".stripMargin) { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft_zone_").toString
+    val dir = graft.Fs.tempDir("graft_zone_").toString
     graft.operators.Layout.writeZOrdered(
       Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), col("value")),
@@ -381,7 +381,7 @@ object ExtraQueries {
         |SELECT src AS source, vec_id, vsum, v0, v7
         |FROM per CROSS JOIN (VALUES ('chunked_f64'), ('contiguous_f32')) s(src)
         |ORDER BY source, vec_id""".stripMargin) { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_h5_gate_")
+      val dir = graft.Fs.tempDir("graft_h5_gate_")
       val m = Array.tabulate(N, D)((i, j) => ((i * 131 + j * 17) % 1000) / 8.0)
       val pc = dir.resolve("contig.hdf5").toString
       val pk = dir.resolve("chunked.hdf5").toString

@@ -394,19 +394,15 @@ object PipelineQueries {
   // partition-pruned SERVE path, and repeated runs don't leak temp dirs.
   // Keyed by applicationId, NOT the session object — a map key would pin
   // every stopped SparkSession's whole object graph in a long-lived JVM.
-  // Temp dirs are removed by a shutdown hook.
+  // Temp dirs are removed at JVM exit.
   private val ivfArtifactCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.Fs.deleteTree(p)
 
   val annIvfPruned = NamedQuery(
     "ann_ivf_pruned",
     annIvfGrid.oracle.get) { (s, d) =>
     val dir = ivfArtifactCache.computeIfAbsent((s.sparkContext.applicationId, d), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(tmp)))
+      val tmp = graft.Fs.tempDir("graft_ivf_")
       Similarity.writeIvfArtifact(
         Tables.embeddings(s, d), col("vec_id"), col("embedding"), nBits = 6, tmp.toString)
       tmp.toString
@@ -687,8 +683,7 @@ object PipelineQueries {
             java.util.Arrays.copyOfRange(seed(j), si * 16, (si + 1) * 16)).toArray
         }.toArray
         val model = PQModel(m = 4, k = 8, dim = 64, centroids = cents)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(tmp)))
+        val tmp = graft.Fs.tempDir("graft_ivfpq_")
         IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), co, model, tmp.toString)
         (tmp.toString, co, model)
       })

@@ -77,24 +77,13 @@ object TestCollections {
   // Application-keyed artifact dirs are unreachable after the JVM exits
   // (the key forbids cross-run reuse by design), so they would leak in
   // java.io.tmpdir forever — one text index + vamana graph + ivf-rbq
-  // layout per bench/verify/dump invocation (round-12 advice). A single
-  // shutdown hook reaps every dir this JVM created (the PipelineQueries
-  // convention); deletion is best-effort — a crash leaks one run's dirs,
-  // not an unbounded accumulation.
-  private val createdArtifactDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val artifactReaper: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      createdArtifactDirs.forEach(p =>
-        try graft.Fs.deleteTree(java.nio.file.Paths.get(p))
-        catch { case _: Throwable => () })
-    }))
+  // layout per bench/verify/dump invocation (round-12 advice). The shared
+  // JVM-exit reaper removes them.
   private def registerArtifactDir(p: String): String = {
-    artifactReaper
-    createdArtifactDirs.add(p)
+    graft.Fs.reapOnExit(java.nio.file.Paths.get(p))
     // withVamanaVectorIndex derives a sibling "<dir>_serve" bucketed
     // serving table next to the graph dir — reap it with its owner
-    createdArtifactDirs.add(p.stripSuffix("/") + "_serve")
+    graft.Fs.reapOnExit(java.nio.file.Paths.get(p.stripSuffix("/") + "_serve"))
     p
   }
 

@@ -42,7 +42,7 @@ object WriteQueries {
       |FROM part
       |WHERE p_size <= 12 AND NOT (p_size BETWEEN 9 AND 10)
       |ORDER BY _id""".stripMargin) { (s, d) =>
-    val dir = Files.createTempDirectory("graft_store_").toString
+    val dir = graft.Fs.tempDir("graft_store_").toString
     val store = new CollectionStore(s, dir)
     val part = Tables.part(s, d).select(
       col("p_partkey").cast("string").as("_id"),
@@ -93,7 +93,7 @@ object WriteQueries {
       |FROM part
       |WHERE p_size <= 10 AND lower(p_name) LIKE 'red%'
       |ORDER BY p_size DESC NULLS LAST, _id LIMIT 12 OFFSET 3""".stripMargin) { (s, d) =>
-    val dir = Files.createTempDirectory("graft_facade_").toString
+    val dir = graft.Fs.tempDir("graft_facade_").toString
     val db = graft.Graft(s, dir)
     val part = Tables.part(s, d).select(
       col("p_partkey").cast("string").as("_id"),
@@ -129,7 +129,7 @@ object WriteQueries {
       |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_price
       |FROM orders
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
-    val dir = Files.createTempDirectory("graft_store_").toString
+    val dir = graft.Fs.tempDir("graft_store_").toString
     val store = new CollectionStore(s, dir)
     val ord = Tables.orders(s, d).select(
       col("o_orderkey").cast("string").as("_id"),
@@ -160,7 +160,7 @@ object WriteQueries {
     val app = s.sparkContext.applicationId
     vamanaDbCache.keySet.removeIf(k => k._1 != app)
     vamanaDbCache.computeIfAbsent((app, d), _ => {
-      val db = graft.Graft(s, Files.createTempDirectory("graft_vamana_store_").toString)
+      val db = graft.Graft(s, graft.Fs.tempDir("graft_vamana_store_").toString)
       db.createCollection("emb",
         IndexSchema("vec" -> IndexKind.VectorVamana(64, IndexKind.Metric.Euclidean)),
         Tables.embeddings(s, d).select(
@@ -219,7 +219,7 @@ object WriteQueries {
     val app = s.sparkContext.applicationId
     opqDbCache.keySet.removeIf(k => k._1 != app)
     opqDbCache.computeIfAbsent((app, d), _ => {
-      val db = graft.Graft(s, Files.createTempDirectory("graft_opq_store_").toString)
+      val db = graft.Graft(s, graft.Fs.tempDir("graft_opq_store_").toString)
       db.createCollection("emb",
         IndexSchema("vec" -> IndexKind.VectorFlat(64, IndexKind.Metric.Cosine,
           IndexKind.Quantizer.Opq(
@@ -272,7 +272,7 @@ object WriteQueries {
     val app = s.sparkContext.applicationId
     rbqDbCache.keySet.removeIf(k => k._1 != app)
     rbqDbCache.computeIfAbsent((app, d), _ => {
-      val db = graft.Graft(s, Files.createTempDirectory("graft_rbq_store_").toString)
+      val db = graft.Graft(s, graft.Fs.tempDir("graft_rbq_store_").toString)
       db.createCollection("emb",
         IndexSchema("vec" -> IndexKind.VectorFlat(64, IndexKind.Metric.Cosine,
           IndexKind.Quantizer.RaBitQ(triggerThreshold = 1))),
@@ -327,7 +327,7 @@ object WriteQueries {
     val app = s.sparkContext.applicationId
     rbqWalkDbCache.keySet.removeIf(k => k._1 != app)
     rbqWalkDbCache.computeIfAbsent((app, d), _ => {
-      val db = graft.Graft(s, Files.createTempDirectory("graft_rbqwalk_store_").toString)
+      val db = graft.Graft(s, graft.Fs.tempDir("graft_rbqwalk_store_").toString)
       db.createCollection("emb",
         IndexSchema("vec" -> IndexKind.VectorVamana(64, IndexKind.Metric.Euclidean,
           quantizer = IndexKind.Quantizer.RaBitQ(triggerThreshold = 1))),
@@ -381,7 +381,7 @@ object WriteQueries {
     """SELECT CAST(p_partkey AS VARCHAR) AS _id, p_name,
       |  CAST(p_size AS BIGINT) AS p_size
       |FROM part WHERE p_size <= 10 ORDER BY _id""".stripMargin) { (s, d) =>
-    val dir = Files.createTempDirectory("graft_backup_").toString
+    val dir = graft.Fs.tempDir("graft_backup_").toString
     val db = graft.Graft(s, dir)
     val part = Tables.part(s, d).select(
       col("p_partkey").cast("string").as("_id"),
@@ -427,7 +427,7 @@ object WriteQueries {
       |  SELECT 'bob' AS tenant, p_partkey, p_size FROM part
       |  WHERE p_size <= 6 AND p_partkey % 2 = 1)
       |ORDER BY tenant, _id""".stripMargin) { (s, d) =>
-    val root = Files.createTempDirectory("graft_tenants_").toString
+    val root = graft.Fs.tempDir("graft_tenants_").toString
     val part = Tables.part(s, d)
       .filter(col("p_size") <= 6)
       .select(col("p_partkey").cast("string").as("_id"),
@@ -479,7 +479,7 @@ object WriteQueries {
     wire9Cache.computeIfAbsent((app, d), _ => {
       import org.json4s._
       import org.json4s.jackson.JsonMethods
-      val dir = Files.createTempDirectory("graft_wire_gate_").toString
+      val dir = graft.Fs.tempDir("graft_wire_gate_").toString
       val r = new graft.wire.WireRouter(graft.Graft(s, dir))
       def call(method: String, path: String, body: String = ""): Unit = {
         val resp = r.handle(method, path, body.getBytes("UTF-8"))
@@ -588,7 +588,7 @@ object WriteQueries {
     wire10Cache.computeIfAbsent((app, d), _ => {
       import org.json4s._
       import org.json4s.jackson.JsonMethods
-      val dir = Files.createTempDirectory("graft_wire_v1_gate_").toString
+      val dir = graft.Fs.tempDir("graft_wire_v1_gate_").toString
       val r = new graft.wire.WireRouter(graft.Graft(s, dir))
       def call(method: String, path: String, body: String = ""): Unit = {
         val resp = r.handle(method, path, body.getBytes("UTF-8"))
@@ -721,7 +721,7 @@ object WriteQueries {
   private def w11Lifecycle(s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, Long)] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val dir = Files.createTempDirectory("graft_wire_metrics_").toString
+    val dir = graft.Fs.tempDir("graft_wire_metrics_").toString
     val m = new graft.wire.WireMetrics
     val svc = new graft.wire.WireService(s, dir,
       userPlans = Map("basic" -> graft.store.UserPlan()), metrics = Some(m))
@@ -800,7 +800,7 @@ object WriteQueries {
       s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String, Long, Float)] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val dir = Files.createTempDirectory("graft_http_listener_").toString
+    val dir = graft.Fs.tempDir("graft_http_listener_").toString
     val svc = new graft.wire.WireService(s, dir,
       userPlans = Map("basic" -> graft.store.UserPlan()))
     val listener = new graft.wire.HttpListener(svc)
@@ -918,7 +918,7 @@ object WriteQueries {
     val app = s.sparkContext.applicationId
     pointDbCache.keySet.removeIf(k => k._1 != app)
     pointDbCache.computeIfAbsent((app, d), _ => {
-      val db = graft.Graft(s, Files.createTempDirectory("graft_point_store_").toString)
+      val db = graft.Graft(s, graft.Fs.tempDir("graft_point_store_").toString)
       val part = Tables.part(s, d).select(
         col("p_partkey").cast("string").as("_id"),
         col("p_name"),

@@ -1758,7 +1758,7 @@ final class CollectionStore(
         // granularity INSIDE each selected bucket — with the parquet
         // default (128 MB) one row group spans the whole bucket and a
         // selected file is read in full, which measured SLOWER than the
-        // pushdown corpus scan at 500k wide docs (tools/PointReadProbe).
+        // pushdown corpus scan at 500k wide docs (RECALL.md).
         // The doc table is never full-scanned, so small row groups cost
         // nothing here.
         graft.operators.Bucketing.writeBucketed(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import graft.sources.Hdf5
 
@@ -33,7 +32,7 @@ object AnnBenchHdf5 {
     val testDs = ds("test")
     require(neighborsDs.cols >= k, s"ground truth has ${neighborsDs.cols} columns < k=$k")
 
-    val root = Files.createTempDirectory("graft_annbench_").toString
+    val root = graft.Fs.tempDir("graft_annbench_").toString
     val db = graft.Graft(spark, root)
     val metric = db.importHdf5("annbench", path)
     if (buildGraph) db.buildVamanaIndex("annbench", "vector")

@@ -1,60 +1,77 @@
 package graft.tools
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dump `.explain("formatted")` for named registry queries to files —
-  * the round-record evidence for plan-shape claims (plans/r<N>/...).
+/** Dump the plans of named registry gates — the evidence for plan-shape
+  * claims (plans/<round>/...).
   *
   * Usage: `runMain graft.tools.DumpPlans <outDir> <suffix> <name> [name ...]`
-  * writes `<outDir>/<name>_<suffix>.txt` per query. The session mirrors
-  * graft.Bench (same master/shuffle-partition/timezone shape via
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS) so the dumped plans are the
-  * bench's plans. Queries whose build fails still produce a file with
-  * the error, so a dump over a historical commit can't silently skip a
-  * gate that doesn't exist there.
+  * (sf dir from SPARK_GRAFT_SF_DIR, session from [[graft.Sessions]], so
+  * the dumped plans are the plans the bench runs). Each gate runs through
+  * the noop sink — every column of every row computed, nothing collected —
+  * and `<outDir>/<name>_<suffix>.txt` holds its optimized logical plan,
+  * its initial physical plan, and the final plan the write executed
+  * (`AdaptiveSparkPlan isFinalPlan=true` where the plan is adaptive: AQE's
+  * runtime rewrites, such as sort-merge to shuffled-hash joins, show only
+  * there). A gate that fails still gets a file with the error, so a dump
+  * over a historical commit cannot silently skip a gate missing there.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: DumpPlans <outDir> <suffix> <name>...")
-    val outDir = java.nio.file.Paths.get(args(0))
-    val suffix = args(1)
-    val names = args.drop(2).toSeq
-    java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same default as graft.Bench ("4"): shuffle-partition count feeds
-    // join-strategy and AQE decisions, so a diverging default would
-    // silently dump plans the bench never executes (round-12 advice) —
-    // round records set SPARK_GRAFT_CPUS explicitly to the bench shape
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror graft.Bench's join-strategy defaults: dumped plans must be
-      // the plans the bench executes
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val registry = graft.SparkEntry.queries
-    names.foreach { name =>
+    val spark = graft.Sessions.local()
+    dump(spark, sfDir, Paths.get(args(0)), args(1), args.drop(2).toSeq)
+      .foreach(f => println(s"[plans] wrote $f"))
+    spark.stop()
+  }
+
+  def dump(spark: SparkSession, sfDir: String, outDir: Path, suffix: String,
+      names: Seq[String]): Seq[Path] = {
+    Files.createDirectories(outDir)
+    names.map { name =>
       val body =
         try {
-          val df = registry(name)(spark, sfDir)
-          df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+          val df = graft.SparkEntry.queries(name)(spark, sfDir)
+          val qe = df.queryExecution
+          Seq(
+            "== Optimized Logical Plan ==", qe.optimizedPlan.treeString,
+            "== Initial Physical Plan ==", qe.executedPlan.treeString,
+            "== Final Physical Plan ==", executedThroughNoop(df).executedPlan.treeString
+          ).mkString("\n")
         } catch {
-          case e: Throwable => s"BUILD FAILED: $e"
+          case e: Throwable => s"FAILED: $e"
         }
-      java.nio.file.Files.write(
-        outDir.resolve(s"${name}_$suffix.txt"),
-        (s"== $name ($suffix, sf=$sfDir, cpus=$cpus) ==\n" + body)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"[plans] wrote ${name}_$suffix.txt")
+      val f = outDir.resolve(s"${name}_$suffix.txt")
+      Files.write(f, (s"== $name ($suffix, sf=$sfDir, cpus=${graft.Sessions.cpus}) ==\n" +
+        body).getBytes(UTF_8))
+      f
     }
-    spark.stop()
+  }
+
+  /** Run `df` through the noop sink and return the write's own
+    * QueryExecution: the write plans its query afresh, so only its plan
+    * shows what actually ran.
+    */
+  private def executedThroughNoop(df: org.apache.spark.sql.DataFrame): QueryExecution = {
+    val spark = df.sparkSession
+    @volatile var write: Option[QueryExecution] = None
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) write = Some(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Bridge.drainListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    write.getOrElse(sys.error("the noop write reported no query execution"))
   }
 }

@@ -76,14 +76,8 @@ object LoadRand {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(2000)
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-loadrand")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val root = java.nio.file.Files.createTempDirectory("graft_loadrand_").toString
+    val spark = graft.Sessions.local()
+    val root = graft.Fs.tempDir("graft_loadrand_").toString
     val r = run(spark, root, nPoints = n, dim = dim)
     // stash → stop → print: the record must be the process's last stdout line
     val line = s"""{"tool":"loadrand","inserted":${r.inserted},"seconds":${f"${r.seconds}%.2f"},"points_per_sec":${f"${r.pointsPerSec}%.1f"},"searched":${r.searched}}"""

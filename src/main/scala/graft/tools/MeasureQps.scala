@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.IndexKind
 import graft.operators.Embeddings
@@ -55,16 +55,7 @@ object MeasureQps {
     val batchK = args.lift(4).map(_.toInt).getOrElse(16)
     val regimes = args.lift(5).map(_.split(",").toSet)
       .getOrElse(Set("exact", "pq", "rbq"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (2048L << 20).toString)
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.shuffle.partitions", "64")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(MeasureRecall.harness: _*)
 
     val storeRoot = s"/tmp/graft_qps_store_f${factor}_d$dOut"
     // the lifted+replicated corpus is a pure function of (base, factor,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off recall measurements outside the RecallReport regeneration:
@@ -11,52 +10,49 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.tools.MeasureRecall <sfDir> <factor> <dOut|0>
   * <m1,m2,...> [searchSize] [graphDir]` (`dOut` 0 = no JL lift, measure at
-  * the stored dimensionality; `graphDir` = a prior run's coded-walk graph
-  * artifact to reuse when sweeping `searchSize` at the same corpus point).
+  * the stored dimensionality; `graphDir` = where to build the graph
+  * artifact, or a prior run's to reuse when sweeping `searchSize` at the
+  * same corpus point — without it the graph lives in a temp dir that is
+  * removed at exit).
   */
 object MeasureRecall {
+
+  /** Session settings of the measurement harness, shared with
+    * [[MeasureQps]]; production and the gates keep the profile defaults.
+    *
+    *   - 2 GB broadcast threshold: high-D measurement points (e.g. 20k ×
+    *     1536-d) keep the vector table small (~100s of MB) while each
+    *     vector is KB-wide, so VamanaBuild's vec-attach joins broadcast
+    *     instead of sort-merging the candidate-pair stream with 6 KB
+    *     vectors attached (measured: ~70 GB of spill per NN-Descent round
+    *     at the stock 10 MB threshold — it filled the disk). The 100k ×
+    *     1536-d point's replicated vec table is ~700 MB; past a 512 MB cap
+    *     it silently fell back to sort-merge and spilled >50 GB in
+    *     minutes. A 48 GB driver heap holds a 2 GB broadcast comfortably.
+    *   - zstd: float shuffle blocks compress materially better than under
+    *     the default lz4 — halves what the prune groupBy still spills.
+    *   - ObjectHashAggregate fallback 4096 with 64 shuffle partitions: the
+    *     prune's collect_list aggregates KB-wide (dist, dst, vec) structs,
+    *     and the stock 128-distinct-keys fallback flips it to sort-based
+    *     aggregation, which externally sorts the wide rows (~50 GB of
+    *     spill at 100k × 1536-d). More, smaller partitions bound per-task
+    *     hash-map memory (100k/64 keys × ≤128 structs × ~6 KB ≈ 1.2 GB per
+    *     task). At real corpus scale the sort-based spill is the scalable
+    *     behaviour — this is a measurement-machine fitting.
+    */
+  val harness: Seq[(String, String)] = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> (2048L << 20).toString,
+    "spark.io.compression.codec" -> "zstd",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096",
+    "spark.sql.shuffle.partitions" -> "64")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val dOut = args.lift(2).map(_.toInt).getOrElse(0)
     val methods = args.lift(3).map(_.split(",").toSet)
       .getOrElse(Set("vamana"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // high-D measurement points (e.g. 20k x 1536-d) keep the vector
-      // table small (~100s of MB) while each vector is KB-wide: letting
-      // VamanaBuild's vec-attach joins broadcast instead of sort-merge
-      // avoids shuffling the candidate-pair stream with 6 KB vectors
-      // attached (measured: ~70 GB of spill per NN-Descent round at the
-      // stock 10 MB threshold — it filled the disk). Production builds
-      // at corpus scale keep the default and SMJ, by design; this is a
-      // measurement-harness conf, same spirit as the suite's 32g heap.
-      // 2 GB: the 100k × 1536-d point's replicated vec table is ~700 MB —
-      // past the previous 512 MB cap it silently fell back to SMJ and
-      // spilled >50 GB in minutes (observed; the exact failure the cap
-      // exists to avoid). The driver heap (48 GB) holds a 2 GB broadcast
-      // comfortably and every measurement corpus stays far below it.
-      .config("spark.sql.autoBroadcastJoinThreshold", (2048L << 20).toString)
-      // float shuffle blocks compress materially better under zstd than
-      // the default lz4 — halves what the prune groupBy still spills
-      .config("spark.io.compression.codec", "zstd")
-      // The prune's collect_list aggregates KB-wide (dist, dst, vec)
-      // structs. ObjectHashAggregate's stock 128-distinct-keys fallback
-      // flips it to SORT-based aggregation, which externally sorts the
-      // wide rows — measured ~50 GB of spill at 100k × 1536-d, a disk
-      // kill on this machine. Raising the fallback threshold (with more,
-      // smaller partitions to bound per-task hash-map memory:
-      // 100k/64 keys × ≤128 structs × ~6 KB ≈ 1.2 GB/task, ×16 slots
-      // ≈ 20 GB peak inside the 48 GB harness heap) keeps it hashing.
-      // At real corpus scale the sort-based spill IS the scalable
-      // behaviour — this is a measurement-machine fitting, like the
-      // broadcast bound above.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.shuffle.partitions", "64")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(harness: _*)
     val emb0 = graft.Tables.embeddings(spark, sfDir)
     val emb =
       if (dOut > 0)

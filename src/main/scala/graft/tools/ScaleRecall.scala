@@ -39,15 +39,17 @@ object ScaleRecall {
       buildParams: graft.operators.VamanaBuild.Params =
         graft.operators.VamanaBuild.Params(degreeBound = 32, iterations = 3),
       methods: Set[String] = Set("vamana", "ivfpq", "sq8"),
-      // Reuse an existing coded-walk graph artifact (a prior run's
-      // graft_scale_vamcoded_<n>/art with its _SUCCESS marker): the corpus
-      // is a pure function of (base table, factor, eps), so a
-      // same-parameters rerun — e.g. sweeping searchSize — can skip the
-      // dominant build cost. The caller owns parameter consistency.
-      graphDir: Option[String] = None): Seq[Row] = {
+      // Where the graph artifact lives, or an existing one to reuse (a
+      // prior run's graphDir with its _SUCCESS marker): the corpus is a
+      // pure function of (base table, factor, eps), so a same-parameters
+      // rerun — e.g. sweeping searchSize — can skip the dominant build
+      // cost. The caller owns parameter consistency. Without it the graph
+      // goes to a temp dir that is removed at JVM exit.
+      graphDir: Option[String] = None): Seq[Row] =
+      graft.operators.VamanaBuild.withPersisted { persist =>
     import spark.implicits._
-    val big = Embeddings.replicatePerturbed(
-      emb, col("vec_id"), col("embedding"), factor, eps).persist()
+    val big = persist(Embeddings.replicatePerturbed(
+      emb, col("vec_id"), col("embedding"), factor, eps))
     val n = big.count()
     val queryVecs: Map[Long, Seq[Float]] = queryBaseIds.map(q =>
       q -> big.filter(col("vec_id") === q).select("embedding")
@@ -136,8 +138,8 @@ object ScaleRecall {
     if (methods("vamana")) {
       // the graph is source-independent, so the override reuses a coded
       // run's artifact for the uncompressed-walk row too
-      val vamDir = graphDir.getOrElse(java.nio.file.Files
-        .createTempDirectory(s"graft_scale_vamana_f$factor").resolve("art").toString)
+      val vamDir = graphDir.getOrElse(
+        graft.Fs.tempDir(s"graft_scale_vamana_f$factor").resolve("art").toString)
       stampOrCheck(vamDir)
     val coll = graft.engine.Collection(
         big.select(col("vec_id").cast("string").as("_id"),
@@ -177,8 +179,8 @@ object ScaleRecall {
     // _SUCCESS-marked graph parquet and the measurement pays the dominant
     // build cost once instead of per source.
     lazy val codedGraphDir = {
-      val d = graphDir.getOrElse(java.nio.file.Files
-        .createTempDirectory(s"graft_scale_vamcoded_f$factor").resolve("art").toString)
+      val d = graphDir.getOrElse(
+        graft.Fs.tempDir(s"graft_scale_vamcoded_f$factor").resolve("art").toString)
       stampOrCheck(d)
       d
     }
@@ -256,8 +258,7 @@ object ScaleRecall {
     // residual IVF-PQ, spill=3, nprobe=8 of 32 cells, ADC + exact rescore
     val coarse = IvfPq.kmeansCoarse(big, col("embedding"), k = 32)
     val pqModel = IvfPq.fitResidualPq(big, col("embedding"), coarse, m = 16, k = 16)
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory(s"graft_scale_ivfpq_f$factor").toString
+    val ivfDir = graft.Fs.tempDir(s"graft_scale_ivfpq_f$factor").toString
     IvfPq.writeArtifact(big, col("vec_id"), col("embedding"), coarse, pqModel,
       ivfDir, spill = 3)
     val ivfGot = queryBaseIds.map { q =>
@@ -280,10 +281,10 @@ object ScaleRecall {
       val pq = graft.operators.ProductQuantizer.fit(
         big, col("embedding"), m = 16, k = 16, dim = dim)
       val opq = graft.operators.Opq.fit(big, col("embedding"), dim = dim, m = 16, k = 16)
-      val pqCodes = graft.operators.ProductQuantizer.encode(
-        big, col("vec_id"), col("embedding"), pq).persist()
-      val opqCodes = graft.operators.Opq.encode(
-        big, col("vec_id"), col("embedding"), opq).persist()
+      val pqCodes = persist(graft.operators.ProductQuantizer.encode(
+        big, col("vec_id"), col("embedding"), pq))
+      val opqCodes = persist(graft.operators.Opq.encode(
+        big, col("vec_id"), col("embedding"), opq))
       def rescored(cands: org.apache.spark.sql.DataFrame, qv: Seq[Float]): Set[Long] = {
         val cand = cands.select("id").collect().map(_.getLong(0)).toSeq
         big.filter(col("vec_id").isin(cand: _*))
@@ -312,8 +313,8 @@ object ScaleRecall {
     if (methods("ivfrbq")) {
       val coarse = IvfPq.kmeansCoarse(big, col("embedding"), k = 32)
       val rotation = graft.operators.RaBitQ.randomRotation(dim, seed = 42L)
-      val enc = graft.operators.IvfRbq.encode(
-        big, col("vec_id"), col("embedding"), coarse, rotation).persist()
+      val enc = persist(graft.operators.IvfRbq.encode(
+        big, col("vec_id"), col("embedding"), coarse, rotation))
       val got = queryBaseIds.map { q =>
         graft.operators.IvfRbq.search(enc, queryVecs(q), coarse, rotation,
             k = k, rescore = rescore, metric = Metric.Cosine, nprobe = 8)
@@ -330,8 +331,8 @@ object ScaleRecall {
     // paper's unbiased estimator (operators/RaBitQ.scala)
     if (methods("rbq")) {
       val model = graft.operators.RaBitQ.fit(big, col("embedding"), dim)
-      val codes = graft.operators.RaBitQ.encode(
-        big, col("vec_id"), col("embedding"), model).persist()
+      val codes = persist(graft.operators.RaBitQ.encode(
+        big, col("vec_id"), col("embedding"), model))
       val rbqGot = queryBaseIds.map { q =>
         val cand = graft.operators.RaBitQ.search(codes, queryVecs(q), model, rescore)
           .select("id").collect().map(_.getLong(0)).toSeq
@@ -350,8 +351,8 @@ object ScaleRecall {
     if (methods("sq8")) {
     // SQ8 + rescore: reconstructed-L2 top-`rescore` → exact cosine re-rank
     val (lo, hi) = ScalarQuantizer.fitMinMax(big, col("embedding"), dim)
-    val codes = ScalarQuantizer.encode(
-      big, col("vec_id"), col("embedding"), lo, hi).persist()
+    val codes = persist(ScalarQuantizer.encode(
+      big, col("vec_id"), col("embedding"), lo, hi))
     val sqGot = queryBaseIds.map { q =>
       val cand = ScalarQuantizer.search(codes, queryVecs(q), lo, hi, rescore)
         .select("id").collect().map(_.getLong(0)).toSeq
@@ -367,7 +368,6 @@ object ScaleRecall {
     codes.unpersist(false)
     }
 
-    big.unpersist(false)
     out.result()
   }
 }

@@ -56,13 +56,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("scale-smoke").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Sessions.local()
 
     val base = graft.Tables.documents(s, sfDir)
     val idStep = base.agg(max("doc_id")).head().getLong(0) + 1

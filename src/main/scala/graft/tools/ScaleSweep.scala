@@ -169,13 +169,7 @@ object ScaleSweep {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse("/tmp/graft_sweep_sf1")
     val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     build(spark, baseDir, factor, outDir, only)
     graft.Tables.names.filter(t => only.forall(_.contains(t))).foreach { t =>
       val n = spark.read.parquet(s"$outDir/$t.parquet").count()

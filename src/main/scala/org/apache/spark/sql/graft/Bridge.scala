@@ -83,4 +83,18 @@ object Bridge {
     }
     df.unpersist(false)
   }
+
+  /** Plans cached in `session`'s CacheManager, which every session of the
+    * application shares (`cacheManager` sits behind the classic API).
+    */
+  def cachedEntries(session: org.apache.spark.sql.SparkSession): Int =
+    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
+
+  /** Block until every event posted so far has reached its listeners:
+    * query-execution listeners run on the listener bus, after the action
+    * returns (`listenerBus` is `private[spark]`).
+    */
+  def drainListeners(session: org.apache.spark.sql.SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

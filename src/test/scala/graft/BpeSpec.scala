@@ -91,7 +91,7 @@ class BpeSpec extends SparkSuite {
   }
 
   test("merge-table artifact round-trips and serves identically") {
-    val dir = java.nio.file.Files.createTempDirectory("bpe_art").toString
+    val dir = Fs.tempDir("bpe_art").toString
     try {
       val learned = Bpe.learnMerges(corpus, col("text"), 6, minPairCount = 1L)
       Bpe.saveMerges(spark, learned, dir)

@@ -29,7 +29,7 @@ class BucketingSpec extends SparkSuite {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_bucketing_spec_").toString
+    Fs.tempDir("graft_bucketing_spec_").toString
 
   test("co-bucketed join is exchange-free and matches the shuffling join") {
     val base = tmp()

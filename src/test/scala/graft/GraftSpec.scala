@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.model.{IndexKind, IndexSchema}
 import IndexKind._
@@ -12,7 +11,7 @@ class GraftSpec extends SparkSuite {
   import spark.implicits._
 
   test("full lifecycle: create, insert, hybrid JSON search, update, delete") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema(
       "body" -> Text(),
       "category" -> Str(caseSensitive = false),
@@ -66,7 +65,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("text index is patched per write — numDocs tracks the live corpus") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("t" -> Text())
     db.createCollection("docs", schema, Seq(
       ("a", "alpha bird"), ("b", "beta bird"), ("c", "gamma fish")
@@ -96,7 +95,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("numDocs stays exact across token-less docs and many patches (compaction)") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     db.createCollection("docs", IndexSchema("t" -> Text()), Seq(
       ("a", "alpha bird"), ("b", ""), ("c", "gamma fish")  // b: non-null, zero tokens
     ).toDF("_id", "t"))
@@ -127,7 +126,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("approx JSON search serves from the store's auto-fitted quantizer") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema(
       "vec" -> VectorFlat(2, Metric.Euclidean, Quantizer.Binary(triggerThreshold = 5)))
     val seed = (0 until 40).map(i => (i.toString, Array(i.toFloat, (i + 1).toFloat)))
@@ -153,7 +152,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("approx JSON search serves from the store's auto-fitted SCALAR quantizer") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema(
       "vec" -> VectorFlat(2, Metric.Euclidean, Quantizer.Scalar(triggerThreshold = 5)))
     val seed = (0 until 40).map(i => (i.toString, Array(i.toFloat, (i + 1).toFloat)))
@@ -176,7 +175,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("approx JSON search serves from the store-MAINTAINED vamana graph") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("vec" -> VectorVamana(2, Metric.Euclidean,
       searchSize = 40, degreeBound = 32))
     val seed = (0 until 60).map(i => (i.toString, Array(i.toFloat, (i * 2).toFloat)))
@@ -211,7 +210,7 @@ class GraftSpec extends SparkSuite {
     // forces the fetching regime) — corpus == searchSize, so the walk
     // visits every reachable node, the pool covers the collection, and
     // the exact re-rank must reproduce exact results
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("vec" -> VectorVamana(2, Metric.Euclidean,
       searchSize = 40, degreeBound = 32,
       quantizer = Quantizer.Product(
@@ -249,7 +248,7 @@ class GraftSpec extends SparkSuite {
     // codes quantize ROTATED vectors and each walk rotates its query
     // once (OpqCodes) before the ADC table; same exactness argument as
     // the PQ case (corpus == searchSize => the pool covers everything)
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("vec" -> VectorVamana(2, Metric.Euclidean,
       searchSize = 40, degreeBound = 32,
       quantizer = Quantizer.Opq(
@@ -287,7 +286,7 @@ class GraftSpec extends SparkSuite {
     // struct payload (bits/norm/dotq/dotc) and rank by the unbiased
     // estimator; same exactness argument as the PQ/OPQ cases (corpus ==
     // searchSize => the pool covers everything reachable)
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("vec" -> VectorVamana(2, Metric.Euclidean,
       searchSize = 40, degreeBound = 32,
       quantizer = Quantizer.RaBitQ(triggerThreshold = 5)))
@@ -319,7 +318,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("multi-tenancy: same-named collections isolated per tenant, quotas independent") {
-    val root = Files.createTempDirectory("graft_mt_").toString
+    val root = Fs.tempDir("graft_mt_").toString
     val a = Graft.forTenant(spark, root, "tenant-a")
     val b = Graft.forTenant(spark, root, "tenant-b",
       graft.store.UserPlan(maxCollections = 1))
@@ -346,7 +345,7 @@ class GraftSpec extends SparkSuite {
   }
 
   test("index patch targets the ids the store committed, not a re-evaluated source") {
-    val db = Graft(spark, Files.createTempDirectory("graft_db_").toString)
+    val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     db.createCollection("docs", IndexSchema("t" -> Text()),
       Seq(("a", "alpha bird")).toDF("_id", "t"))
     def q(term: String) =

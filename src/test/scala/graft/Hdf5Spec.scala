@@ -14,7 +14,7 @@ import graft.sources.Hdf5.{F32, F64, I32}
 class Hdf5Spec extends SparkSuite {
 
   private def tmp(n: String) =
-    Files.createTempDirectory("graft_h5_").resolve(n).toString
+    Fs.tempDir("graft_h5_").resolve(n).toString
 
   // deterministic matrix, exactly representable in float32 (≤3 fraction
   // bits, small magnitude) so f64/f32 round-trips compare with ==
@@ -99,7 +99,7 @@ class Hdf5Spec extends SparkSuite {
   }
 
   test("reference loader parity: angular file names normalize and pick cosine") {
-    val dir = Files.createTempDirectory("graft_h5_")
+    val dir = Fs.tempDir("graft_h5_")
     val pe = dir.resolve("mnist-784-euclidean.hdf5").toString
     val pa = dir.resolve("glove-25-angular.hdf5").toString
     val m = mat(20, 4).map(_.map(_ + 1.0)) // keep away from the zero vector
@@ -120,14 +120,14 @@ class Hdf5Spec extends SparkSuite {
   }
 
   test("importHdf5: ann-benchmarks file becomes a searchable collection") {
-    val dir = Files.createTempDirectory("graft_h5_imp_")
+    val dir = Fs.tempDir("graft_h5_imp_")
     val p = dir.resolve("rand-4-angular.hdf5").toString
     // distinct directions so cosine ranking is unambiguous
     val m = Array.tabulate(30, 4)((i, j) =>
       (if (j == i % 4) 8.0 else 1.0) + (i / 4) * 0.125)
     graft.sources.Hdf5Write.write(p, Seq(Hdf5Write.Spec("train", m, F32)))
     val db = graft.Graft(spark,
-      Files.createTempDirectory("graft_h5_db_").toString)
+      Fs.tempDir("graft_h5_db_").toString)
     assert(db.importHdf5("bench", p) == "cosine")
     // the stored vectors are normalized (angular), and the nearest
     // neighbor of row 0's own direction is row 0 itself
@@ -143,7 +143,7 @@ class Hdf5Spec extends SparkSuite {
   }
 
   test("DataSource V2: spark.read.format(\"hdf5\") and SQL USING hdf5") {
-    val dir = Files.createTempDirectory("graft_h5_dsv2_")
+    val dir = Fs.tempDir("graft_h5_dsv2_")
     val p = dir.resolve("dsv2-angular.hdf5").toString
     val m = mat(90, 5).map(_.map(_ + 1.0))
     Hdf5Write.write(p, Seq(
@@ -171,7 +171,7 @@ class Hdf5Spec extends SparkSuite {
   }
 
   test("AnnBenchHdf5: the reference's evaluation loop scores recall 1.0 exact") {
-    val dir = Files.createTempDirectory("graft_h5_ab_")
+    val dir = Fs.tempDir("graft_h5_ab_")
     val p = dir.resolve("toy-4-euclidean.hdf5").toString
     // distinct vectors with distinct pairwise distances (quadratic spread)
     val train = Array.tabulate(24, 4)((i, j) =>
@@ -194,11 +194,11 @@ class Hdf5Spec extends SparkSuite {
   }
 
   test("exportHdf5 round-trips a collection back to an importable file") {
-    val dir = Files.createTempDirectory("graft_h5_exp_")
+    val dir = Fs.tempDir("graft_h5_exp_")
     val p = dir.resolve("src-4-euclidean.hdf5").toString
     val m = mat(17, 4)
     graft.sources.Hdf5Write.write(p, Seq(Hdf5Write.Spec("train", m, F32)))
-    val db = graft.Graft(spark, Files.createTempDirectory("graft_h5_edb_").toString)
+    val db = graft.Graft(spark, Fs.tempDir("graft_h5_edb_").toString)
     db.importHdf5("src", p)
     val out = dir.resolve("exported.hdf5").toString
     assert(db.exportHdf5("src", "vector", out) == 17L)

@@ -24,7 +24,7 @@ class HttpListenerSpec extends SparkSuite {
   private def withListener(
       secret: Option[String] = None, whitelist: Seq[String] = Nil,
       metrics: Option[WireMetrics] = None)(f: (HttpListener, Int) => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_http_spec_").toString
+    val dir = Fs.tempDir("graft_http_spec_").toString
     val svc = new WireService(spark, dir,
       userPlans = Map("basic" -> graft.store.UserPlan()),
       proxySecret = secret, whiteListIps = whitelist, metrics = metrics)
@@ -53,7 +53,7 @@ class HttpListenerSpec extends SparkSuite {
     // the cap guards driver memory ahead of authentication: the listener
     // must reject on the declared length (and on the streamed length when
     // the declaration lies) without invoking the service
-    val dir = java.nio.file.Files.createTempDirectory("graft_http_spec_").toString
+    val dir = Fs.tempDir("graft_http_spec_").toString
     val svc = new WireService(spark, dir,
       userPlans = Map("basic" -> graft.store.UserPlan()))
     val l = new graft.wire.HttpListener(svc, maxBodyBytes = 1024)
@@ -152,7 +152,7 @@ class HttpListenerSpec extends SparkSuite {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val m = new WireMetrics
-    val dir = java.nio.file.Files.createTempDirectory("graft_http_conc_").toString
+    val dir = Fs.tempDir("graft_http_conc_").toString
     val svc = new WireService(spark, dir,
       userPlans = Map("basic" -> graft.store.UserPlan()), metrics = Some(m))
     val l = new HttpListener(svc)

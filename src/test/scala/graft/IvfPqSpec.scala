@@ -31,7 +31,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("residual IVF-PQ artifact: partition-pruned probes, high recall with rescore") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+    val dir = Fs.tempDir("graft_ivfpq_").toString
     val coarse = IvfPq.signCoarse(emb, col("embedding"), nBits = 4)
     val pq = IvfPq.fitResidualPq(emb, col("embedding"), coarse, m = 16, k = 16)
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, pq, dir)
@@ -52,7 +52,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("artifact is self-contained: loaded model serves identically to the fit state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_self_").toString
+    val dir = Fs.tempDir("graft_ivfpq_self_").toString
     val coarse = IvfPq.kmeansCoarse(emb, col("embedding"), k = 16)
     val pq = IvfPq.fitResidualPq(emb, col("embedding"), coarse, m = 8, k = 16)
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, pq, dir)
@@ -75,7 +75,7 @@ class IvfPqSpec extends SparkSuite {
   }
 
   test("meta guard: probing with a different geometry fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+    val dir = Fs.tempDir("graft_ivfpq_").toString
     val coarse = IvfPq.signCoarse(emb, col("embedding"), nBits = 4)
     val pq = IvfPq.fitResidualPq(emb, col("embedding"), coarse, m = 8, k = 16)
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, pq, dir)
@@ -92,7 +92,7 @@ class IvfPqSpec extends SparkSuite {
     val km = IvfPq.kmeansCoarse(emb, col("embedding"), k = 32)
     val qv = graft.queries.TestCollections.queryVector(spark, sf001, 99)
     val pq = IvfPq.fitResidualPq(emb, col("embedding"), km, m = 16, k = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_cmp_").toString
+    val dir = Fs.tempDir("graft_ivfpq_cmp_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), km, pq, dir)
     val got = IvfPq.searchArtifact(spark, dir, qv, km, pq,
       k = 10, rescore = 60, metric = Metric.Cosine, nprobe = 8)
@@ -104,8 +104,8 @@ class IvfPqSpec extends SparkSuite {
   test("spill=2 multi-assignment: recall ≥0.8 at the quarter-cells budget, no dup ids") {
     val km = IvfPq.kmeansCoarse(emb, col("embedding"), k = 32)
     val pq = IvfPq.fitResidualPq(emb, col("embedding"), km, m = 16, k = 16)
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_ivfpq_s1_").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_s2_").toString
+    val dir1 = Fs.tempDir("graft_ivfpq_s1_").toString
+    val dir2 = Fs.tempDir("graft_ivfpq_s2_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), km, pq, dir1)
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), km, pq, dir2, spill = 2)
     // the spilled artifact carries exactly 2 copies of every vector
@@ -145,7 +145,7 @@ class IvfPqSpec extends SparkSuite {
 
   test("engine approx near serves from an attached IVF-PQ artifact with pruned probes") {
     import graft.engine.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_engine_").toString
+    val dir = Fs.tempDir("graft_ivfpq_engine_").toString
     val base = graft.queries.TestCollections.docs(spark, sf001)
     val coll = base.withIvfPqVectorIndex(
       "embedding", dir,
@@ -183,7 +183,7 @@ class IvfPqSpec extends SparkSuite {
 
   test("engine approx near over a SPILLED artifact: unique ids, exact self-match") {
     import graft.engine.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_spill_eng_").toString
+    val dir = Fs.tempDir("graft_ivfpq_spill_eng_").toString
     val base = graft.queries.TestCollections.docs(spark, sf001)
     val coll = base.withIvfPqVectorIndex(
       "embedding", dir,
@@ -221,7 +221,7 @@ class IvfPqSpec extends SparkSuite {
       .agg(avg(abs(col("a") - col("true_d")))).as[Double].head()
 
     // residual ADC approx via the artifact search's scoring path
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_err_").toString
+    val dir = Fs.tempDir("graft_ivfpq_err_").toString
     IvfPq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, resPq, dir)
     val art = spark.read.parquet(dir)
     val cells = art.select("bucket").distinct().as[Int].collect().toSeq
@@ -269,7 +269,7 @@ class IvfPqSpec extends SparkSuite {
     val scaled = emb.select(col("vec_id"), transform(col("embedding"),
       x => (x.cast("double") * (lit(1.0) + (col("vec_id") % 5).cast("double")))
         .cast("float")).as("v"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_dot_").toString
+    val dir = Fs.tempDir("graft_ivfpq_dot_").toString
     val coll = graft.engine.Collection(
         scaled.select(col("vec_id").cast("string").as("_id"), col("v")),
         graft.model.IndexSchema("v" -> graft.model.IndexKind.VectorFlat(64, Metric.Dot)))

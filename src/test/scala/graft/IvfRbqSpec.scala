@@ -29,7 +29,7 @@ class IvfRbqSpec extends SparkSuite {
   }
 
   test("written artifact probes are partition-pruned; recall band holds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfrbq_").toString
+    val dir = Fs.tempDir("graft_ivfrbq_").toString
     IvfRbq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, rotation, dir)
     val art = spark.read.parquet(dir)
     val qv = vecs(7)
@@ -73,7 +73,7 @@ class IvfRbqSpec extends SparkSuite {
   }
 
   test("encode round-trips through the artifact byte-identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfrbq_rt_").toString
+    val dir = Fs.tempDir("graft_ivfrbq_rt_").toString
     IvfRbq.writeArtifact(emb, col("vec_id"), col("embedding"), coarse, rotation, dir)
     val mem = IvfRbq.encode(emb, col("vec_id"), col("embedding"), coarse, rotation)
       .select("id", "bucket", "bits", "norm", "dotq", "dotc")
@@ -113,8 +113,7 @@ class IvfRbqSpec extends SparkSuite {
 
   test("engine approx near serves from the attached artifact; meta guard fails fast") {
     val base = queries.TestCollections.docs(spark, sf0001)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfrbq_eng_").toString + "/art"
+    val dir = Fs.tempDir("graft_ivfrbq_eng_").toString + "/art"
     val coll = base.withIvfRbqVectorIndex("embedding", dir,
       () => IvfPq.signCoarse(base.df, col("embedding"), nBits = 4),
       rotation, nprobe = 8)

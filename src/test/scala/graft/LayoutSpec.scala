@@ -92,7 +92,7 @@ class LayoutSpec extends SparkSuite {
     // themselves (input_file_name groups = footer-stat granularity).
     val pts = (0 until 4096).map { i => (i.toLong, (i * 2654435761L) % 4096L) }
     val df = pts.toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = Fs.tempDir("zorder").toString
     Layout.writeZOrdered(df, s"$dir/z", Seq($"x", $"y"), numFiles = 16, bits = 12)
     df.orderBy("x").repartitionByRange(16, $"x").sortWithinPartitions("x")
       .write.mode("overwrite").parquet(s"$dir/flat")

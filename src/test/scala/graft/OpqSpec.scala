@@ -174,7 +174,7 @@ class OpqSpec extends SparkSuite {
   // ---- store lifecycle ------------------------------------------------------
 
   test("store lifecycle: opq schema round-trips, trigger fits, JSON reloads the model") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_opq_spec_").toString
+    val dir = Fs.tempDir("graft_opq_spec_").toString
     val store = new graft.store.CollectionStore(spark, dir)
     val schema = graft.model.IndexSchema("vec" ->
       graft.model.IndexKind.VectorFlat(64, graft.model.IndexKind.Metric.Cosine,

@@ -47,18 +47,18 @@ class PipelineSpec extends SparkSuite {
   test("streaming ingestion lands micro-batches through the store contract") {
     import graft.model.{IndexKind, IndexSchema}
     import graft.store.CollectionStore
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_src_").toString
+    val srcDir = Fs.tempDir("graft_src_").toString
     val seedRows = Seq(("s1", "alpha", 1L), ("s2", "beta", 2L))
     seedRows.toDF("_id", "name", "size").write.mode("overwrite").parquet(srcDir)
     val store = new CollectionStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_store_").toString)
+      Fs.tempDir("graft_store_").toString)
     store.create("stream_c",
       IndexSchema("name" -> IndexKind.Str(), "size" -> IndexKind.Integer),
       Seq(("seed", "zero", 0L)).toDF("_id", "name", "size"))
     val stream = spark.readStream
       .schema(seedRows.toDF("_id", "name", "size").schema)
       .parquet(srcDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val ckpt = Fs.tempDir("graft_ckpt_").toString
     val q = EventsStream.ingestInto(stream, store, "stream_c", ckpt)
     try q.processAllAvailable() finally q.stop()
     val got = store.load("stream_c").df.orderBy("_id").collect()
@@ -69,7 +69,7 @@ class PipelineSpec extends SparkSuite {
   test("distributed ingestion: multi-partition batch lands per-task, w1 semantics hold") {
     import graft.model.{IndexKind, IndexSchema}
     import graft.store.CollectionStore
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_srcd_").toString
+    val srcDir = Fs.tempDir("graft_srcd_").toString
     // a batch larger than one insert() contract, spread over 8 partitions
     val n = 25000
     spark.range(n)
@@ -77,7 +77,7 @@ class PipelineSpec extends SparkSuite {
         concat(lit("name"), col("id")).as("name"), col("id").as("size"))
       .repartition(8)
       .write.mode("overwrite").parquet(srcDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_stored_").toString
+    val root = Fs.tempDir("graft_stored_").toString
     val store = new CollectionStore(spark, root)
     store.create("bulk_c",
       IndexSchema("name" -> IndexKind.Str(), "size" -> IndexKind.Integer),
@@ -85,7 +85,7 @@ class PipelineSpec extends SparkSuite {
     val stream = spark.readStream
       .schema(spark.read.parquet(srcDir).schema)
       .parquet(srcDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckptd_").toString
+    val ckpt = Fs.tempDir("graft_ckptd_").toString
     val q = EventsStream.ingestIntoDistributed(stream, store, "bulk_c", ckpt)
     try q.processAllAvailable() finally q.stop()
     assert(store.load("bulk_c").df.count() == n + 1)
@@ -188,7 +188,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("bucket-partitioned IVF artifact turns probes into partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val dir = Fs.tempDir("graft_ivf_").toString
     val emb = Tables.embeddings(spark, sf0001)
     Similarity.writeIvfArtifact(emb, col("vec_id"), col("embedding"), nBits = 6, dir)
     val qv = graft.queries.TestCollections.queryVector(spark, sf0001, 7)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.Search
 import graft.model._
@@ -37,7 +36,7 @@ class PointReadSpec extends SparkSuite {
     * honor.
     */
   private def mutatedStore(): (CollectionStore, String, String) = {
-    val root = Files.createTempDirectory("graft_pointread_").toString
+    val root = Fs.tempDir("graft_pointread_").toString
     val st = new CollectionStore(spark, root)
     st.create("docs", schema, seed(55).filter(col("size") < 50))
     st.insert("docs", seed(55).filter(col("size") >= 50))
@@ -179,7 +178,7 @@ class PointReadSpec extends SparkSuite {
   }
 
   test("compaction publishes the next doc-table generation and retires one-behind") {
-    val root = Files.createTempDirectory("graft_pointread_").toString
+    val root = Fs.tempDir("graft_pointread_").toString
     val st = new CollectionStore(spark, root)
     st.create("c", schema, seed(20))
     val first = st.load("c")

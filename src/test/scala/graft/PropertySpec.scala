@@ -287,7 +287,7 @@ class PropertySpec extends AnyFunSuite {
           (((i * 131 + j * 17 + seed) % 1000) - 500) / 8.0)
         val mExpect =
           if (dt == Hdf5.I32) m.map(_.map(_.toInt.toDouble)) else m
-        val p = java.nio.file.Files.createTempDirectory("graft_h5_prop_")
+        val p = Fs.tempDir("graft_h5_prop_")
           .resolve("t.hdf5").toString
         Hdf5Write.write(p, Seq(Hdf5Write.Spec("train", m, dt,
           chunk = chunk, shuffle = shuffle, deflate = deflate)))

@@ -19,7 +19,7 @@ import graft.model.IndexKind
 class QpsSpec extends SparkSuite {
 
   test("listener serving clears the QPS floor; the batch endpoint amortizes") {
-    val root = java.nio.file.Files.createTempDirectory("graft_qps_spec_").toString
+    val root = Fs.tempDir("graft_qps_spec_").toString
     // SQ8-quantized flat collection: trigger fires at create, so
     // `"approx": true` requests serve from the artifact and a batch of
     // them is the FUSED multi-query scan (the batchable shape)

@@ -211,7 +211,7 @@ class RaBitQSpec extends SparkSuite {
   }
 
   test("store lifecycle: rabitq schema round-trips, trigger fits, JSON reloads the model") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rbq_spec_").toString
+    val dir = Fs.tempDir("graft_rbq_spec_").toString
     val store = new graft.store.CollectionStore(spark, dir)
     val schema = graft.model.IndexSchema("vec" ->
       graft.model.IndexKind.VectorFlat(64, graft.model.IndexKind.Metric.Cosine,

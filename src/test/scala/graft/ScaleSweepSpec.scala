@@ -13,7 +13,7 @@ class ScaleSweepSpec extends SparkSuite {
 
   private val factor = 3
   private lazy val outDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_sweep_spec_").toString
+    val d = Fs.tempDir("graft_sweep_spec_").toString
     ScaleSweep.build(spark, sf0001, factor, d)
     d
   }

@@ -210,7 +210,7 @@ class ScoringSpec extends SparkSuite {
     // the file stream source wants a DIRECTORY to watch — stage the
     // single-file table into a temp dir
     val src = java.nio.file.Paths.get(s"$sf0001/documents.parquet")
-    val dirPath = java.nio.file.Files.createTempDirectory("graft_stream_docs")
+    val dirPath = Fs.tempDir("graft_stream_docs")
     java.nio.file.Files.copy(src, dirPath.resolve("part-0.parquet"))
     val dir = dirPath.toString
     val schema = spark.read.parquet(dir).schema

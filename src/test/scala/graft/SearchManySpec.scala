@@ -181,8 +181,7 @@ class SearchManySpec extends SparkSuite {
     val base = queries.TestCollections.docs(spark, sf0001)
     val rotation = Array.tabulate(64)(i =>
       Array.tabulate(64)(j => if (i == j) 1.0 else 0.0))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfrbq_many_").toString + "/art"
+    val dir = Fs.tempDir("graft_ivfrbq_many_").toString + "/art"
     val coll = base.withIvfRbqVectorIndex("embedding", dir,
       () => graft.operators.IvfPq.signCoarse(base.df, col("embedding"), nBits = 4),
       rotation, nprobe = 4)
@@ -200,8 +199,7 @@ class SearchManySpec extends SparkSuite {
 
   test("flat searchMany fuses SPILLED IVF-PQ requests (per-id min dedup preserved)") {
     val base = queries.TestCollections.docs(spark, sf0001)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_many_").toString
+    val dir = Fs.tempDir("graft_ivfpq_many_").toString
     // spill=2 stores ids in TWO cells: the batched route must keep the
     // single route's per-id min-quantized-distance dedup, or duplicate
     // candidates would burn budget slots and drift the candidate set

@@ -11,7 +11,7 @@ class SkippingSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("skipping").toString
+    val d = Fs.tempDir("skipping").toString
     Tables.documents(spark, sf001)
       .repartitionByRange(16, $"doc_id").sortWithinPartitions("doc_id")
       .write.mode("overwrite").parquet(s"$d/docs")
@@ -75,7 +75,7 @@ class SkippingSpec extends SparkSuite {
   }
 
   test("incremental update equals a full rebuild; stale rows dropped") {
-    val d = java.nio.file.Files.createTempDirectory("skipinc").toString
+    val d = Fs.tempDir("skipinc").toString
     val docs = Tables.documents(spark, sf001)
     docs.filter($"doc_id" < 300)
       .repartitionByRange(4, $"doc_id").write.mode("overwrite").parquet(s"$d/t")
@@ -101,7 +101,7 @@ class SkippingSpec extends SparkSuite {
   }
 
   test("zone map over a z-ordered write is tight on BOTH dimensions") {
-    val d = java.nio.file.Files.createTempDirectory("zskip").toString
+    val d = Fs.tempDir("zskip").toString
     val ev = Tables.events(spark, sf001).select($"event_id", $"user_id", $"value")
     graft.operators.Layout.writeZOrdered(ev, s"$d/z",
       Seq($"user_id", $"value"), numFiles = 16, bits = 12)

@@ -26,17 +26,7 @@ object SparkSuite {
   private val groups = new java.util.concurrent.atomic.AtomicLong()
 
   // One session per JVM (sbt forks one test JVM); suites share it so the
-  // whole test run pays session startup once.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // whole test run pays session startup once. The suite runs the profile
+  // the bench and the tools run.
+  lazy val session: SparkSession = Sessions.local()
 }

@@ -9,7 +9,7 @@ class StoreSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new CollectionStore(spark, Files.createTempDirectory("graft_test_").toString)
+    new CollectionStore(spark, Fs.tempDir("graft_test_").toString)
 
   private val schema = IndexSchema(
     "name" -> IndexKind.Str(),
@@ -139,7 +139,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("writes land in the WAL, fold into ONE delta at the next read") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     st.create("c1", schema, seed)
     assert(st.update("c1", Seq(("b", 20L)).toDF("_id", "size")) == 1)
@@ -165,7 +165,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("a second store instance recovers the WAL (crash durability)") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     st.create("c1", schema, seed)
     assert(st.update("c1", Seq(("b", 21L)).toDF("_id", "size")) == 1)
@@ -339,7 +339,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("delta log compacts into the next base at the threshold") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     st.create("c1", schema, seed)
     // update+read cycles: each read folds one batch into its own delta,
@@ -372,7 +372,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("non-finite floats survive the WAL round-trip (crash recovery)") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     val vschema = IndexSchema("price" -> IndexKind.Float,
       "v" -> IndexKind.VectorFlat(2, IndexKind.Metric.Euclidean))
@@ -392,7 +392,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("list on a fresh root is empty; zero-match writes are no-ops on disk") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     assert(st.list().isEmpty)
     st.create("c1", schema, seed)
@@ -453,7 +453,7 @@ class StoreSpec extends SparkSuite {
 
   test("user plan quotas: collection count and points per collection") {
     import graft.store.UserPlan
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir,
       UserPlan(maxCollections = 1, maxPointsPerCollection = 4))
     st.create("c1", schema, seed) // 3 points
@@ -554,7 +554,7 @@ class StoreSpec extends SparkSuite {
   }
 
   test("binary, timestamp, date, and map columns survive the WAL (crash recovery)") {
-    val dir = Files.createTempDirectory("graft_test_").toString
+    val dir = Fs.tempDir("graft_test_").toString
     val st = new CollectionStore(spark, dir)
     val data = Seq(
       ("a", Array[Byte](1, 2, 3), java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456"),
@@ -636,7 +636,7 @@ class StoreSpec extends SparkSuite {
     // keeps every serving artifact (vamana graph, fitted quantizer)
     // write-consistent. A stale artifact would surface a deleted id here.
     import graft.model._
-    val dir = Files.createTempDirectory("graft_stale_").toString
+    val dir = Fs.tempDir("graft_stale_").toString
     val db = graft.Graft(spark, dir)
     val n = 30
     val rows = (0 until n).map(i =>

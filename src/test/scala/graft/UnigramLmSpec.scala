@@ -75,7 +75,7 @@ class UnigramLmSpec extends SparkSuite {
   test("save/load round-trips the model; served tokenization identical") {
     val docs = Tables.documents(spark, sf0001)
     val m = UnigramLm.train(docs, col("text"), vocabSize = 80, emIters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("unigram").toString
+    val dir = Fs.tempDir("unigram").toString
     UnigramLm.save(spark, m, s"$dir/m")
     val loaded = UnigramLm.load(spark, s"$dir/m")
     assert(loaded.pieces === m.pieces)

@@ -119,8 +119,7 @@ class VamanaServeSpec extends SparkSuite {
     // force the distributed regime over the real artifact, with a serve
     // cache target like the store-backed attach provides
     spark.conf.set("graft.vamana.localMaxBytes", "1")
-    val serveDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_").toString + "/serve"
+    val serveDir = Fs.tempDir("graft_serve_").toString + "/serve"
     try {
       val fresh = VamanaVectorIndex(idx.entry, idx.maxHops, art, Some(serveDir))
       assert(fresh.local.isEmpty) // the budget decision
@@ -172,8 +171,7 @@ class VamanaServeSpec extends SparkSuite {
     // (_gid, _codes, _nbrs) and rank by ADC; only the final re-rank
     // reads full vectors. The pool is approximate — assert the SERVED
     // top-10 (exact re-rank of the pool) against the exact search.
-    val serveDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_coded_").toString + "/serve"
+    val serveDir = Fs.tempDir("graft_serve_coded_").toString + "/serve"
     val pq = graft.operators.ProductQuantizer.fit(
       art, col("_vec"), m = 16, k = 16, dim = 64)
     // set directly before the try: a fit failure above must not leak the
@@ -229,8 +227,7 @@ class VamanaServeSpec extends SparkSuite {
     // seeded) holds REGARDLESS of ADC ranking quality — assert it, plus
     // in-filter-only membership on a broad filter
     spark.conf.set("graft.vamana.localMaxBytes", "1")
-    val serveDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_codedf_").toString + "/serve"
+    val serveDir = Fs.tempDir("graft_serve_codedf_").toString + "/serve"
     val pq = graft.operators.ProductQuantizer.fit(
       art, col("_vec"), m = 16, k = 16, dim = 64)
     try {
@@ -269,8 +266,7 @@ class VamanaServeSpec extends SparkSuite {
     // rotates its query once before the ADC table — assert the layout is
     // identical to the PQ-coded one and the SERVED top-10 (exact re-rank
     // of the pool) keeps the recall band
-    val serveDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_opqcoded_").toString + "/serve"
+    val serveDir = Fs.tempDir("graft_serve_opqcoded_").toString + "/serve"
     val opq = graft.operators.Opq.fit(
       art, col("_vec"), dim = 64, m = 16, k = 16)
     spark.conf.set("graft.vamana.localMaxBytes", "1")
@@ -309,8 +305,7 @@ class VamanaServeSpec extends SparkSuite {
     // D/64 longs + 3 scalars, narrower than PQ m=16 already at 64-d —
     // and rank by the unbiased estimator. Same layout assertions as the
     // PQ/OPQ bands and the same SERVED recall bar.
-    val serveDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_rbqcoded_").toString + "/serve"
+    val serveDir = Fs.tempDir("graft_serve_rbqcoded_").toString + "/serve"
     val rbq = graft.operators.RaBitQ.fit(art, col("_vec"), dim = 64)
     spark.conf.set("graft.vamana.localMaxBytes", "1")
     try {

@@ -237,4 +237,22 @@ class VamanaSpec extends SparkSuite {
       .as[(Long, Seq[Long])].collect().toMap
     assert(single == adj)
   }
+
+  test("a build that fails at runtime leaves no cached plan behind") {
+    import org.apache.spark.sql.graft.Bridge
+    val params = VamanaBuild.Params(degreeBound = 8, iterations = 1, ringDegree = 2)
+    val small = emb.filter(col("vec_id") < 60)
+    val before = Bridge.cachedEntries(spark)
+    VamanaBuild.build(small, col("vec_id"), col("embedding"), Metric.Euclidean, params)
+      .count()
+    assert(Bridge.cachedEntries(spark) == before)
+    val boom = udf { (id: Long, v: Seq[Float]) =>
+      if (id == 17L) throw new IllegalStateException("bad vector") else v
+    }
+    val bad = small.select(col("vec_id"), boom(col("vec_id"), col("embedding")).as("embedding"))
+    val e = intercept[Exception](
+      VamanaBuild.build(bad, col("vec_id"), col("embedding"), Metric.Euclidean, params))
+    assert(e.getMessage.contains("bad vector"))
+    assert(Bridge.cachedEntries(spark) == before)
+  }
 }

@@ -12,7 +12,7 @@ import graft.wire.WireRouter
 class WireRouterSpec extends SparkSuite {
 
   private def freshRouter(): WireRouter = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wire_").toString
+    val dir = Fs.tempDir("graft_wire_").toString
     new WireRouter(graft.Graft(spark, dir))
   }
 
@@ -182,7 +182,7 @@ class WireRouterSpec extends SparkSuite {
   }
 
   test("WireService: app-header middleware + tenant isolation through the wire") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wiresvc_").toString
+    val root = Fs.tempDir("graft_wiresvc_").toString
     val svc = new graft.wire.WireService(spark, root,
       userPlans = Map("basic" -> graft.store.UserPlan()))
     // header validation mirrors the reference middleware
@@ -332,7 +332,7 @@ class WireRouterSpec extends SparkSuite {
   }
 
   test("security middleware: ProxySecret 407, WhiteListIP 403, disabled configs pass") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wiresec_").toString
+    val root = Fs.tempDir("graft_wiresec_").toString
     val plans = Map("basic" -> graft.store.UserPlan())
     val alice = Map("X-User-Id" -> "alice", "X-Plan-Id" -> "basic")
     // proxy secret: missing or wrong header → 407 "forbidden" (the
@@ -357,7 +357,7 @@ class WireRouterSpec extends SparkSuite {
   }
 
   test("metrics: request vectors + point counters, prometheus text exposition") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wiremet_").toString
+    val root = Fs.tempDir("graft_wiremet_").toString
     val m = new graft.wire.WireMetrics
     val svc = new graft.wire.WireService(spark, root,
       Map("basic" -> graft.store.UserPlan()), metrics = Some(m))
