@@ -30,10 +30,11 @@ object QueryCompiler {
   final case class Ids(df: DataFrame) extends SetRep
 
   /** `setFromRanked`: the set is EXACTLY the ranked frame's ids (every
-    * ranked leaf) — the search assembly then joins the collection against
-    * `ranked` once instead of running the top-k subtree twice (semi-join
-    * membership + broadcast backfill are different projections of the
-    * same plan, which Spark will not share).
+    * ranked leaf, and a merge of such children) — the search assembly
+    * then joins the collection against `ranked` once instead of running
+    * the top-k subtree twice (semi-join membership + broadcast backfill
+    * are different projections of the same plan, which Spark will not
+    * share).
     */
   final case class Compiled(
       set: SetRep, ranked: Option[DataFrame], setFromRanked: Boolean = false)
@@ -839,25 +840,32 @@ object QueryCompiler {
 
   // ---- combinators --------------------------------------------------------
 
+  /** The `_and`/`_or` merge (search.go:243–298). Every ranked child is a
+    * top-k of at most its limit rows (≤75, Validation), so it is held on
+    * the driver ([[local]]): the set, the ranked union and the `_and`
+    * restriction then read one `LocalRelation` instead of re-running the
+    * child, and [[LocalFold]] folds the union, the restriction and the
+    * grouped sum into a `LocalRelation` too — no job. When every child is
+    * `setFromRanked`, the merged set is exactly the merged ranked ids, for
+    * `_or` and for `_and`, so the merge is `setFromRanked` as well and the
+    * search assembly takes its ranked branch; a predicate child keeps the
+    * set-merge and backfill plan.
+    */
   private def merge(col0: Collection, childrenRaw: Seq[Compiled], disjunction: Boolean): Compiled = {
     require(childrenRaw.nonEmpty, "combinator must have at least one subquery")
     if (childrenRaw.length == 1) return childrenRaw.head // shortcut (search.go:243–246)
 
-    // pin every ranked child's top-k result (≤ its limit rows, so this is
-    // a tiny eager materialization): the frame is referenced by the set
-    // materialization, the ranked union, AND the backfill restriction —
-    // three separate plan instances Spark would otherwise execute as
-    // three full corpus scans. Blocks are GC-reclaimed with the frame.
     val children = childrenRaw.map {
       case Compiled(set0, Some(r), sfr) =>
-        val ck = r.localCheckpoint()
-        Compiled(if (sfr) Ids(ck.select(IdCol)) else set0, Some(ck), sfr)
+        val l = local(r)
+        Compiled(if (sfr) Ids(l.select(IdCol)) else set0, Some(l), sfr)
       case c => c
     }
 
     // set merge: stay in Column algebra when every child is a predicate —
-    // the whole tree then collapses into one pushdown-able filter.
-    val set: SetRep =
+    // the whole tree then collapses into one pushdown-able filter. Lazy:
+    // an `_or` of ranked children never needs it.
+    lazy val set: SetRep =
       if (children.forall(_.set.isInstanceOf[Pred])) {
         val preds = children.map(_.set.asInstanceOf[Pred].c)
         Pred(if (disjunction) preds.reduce(_ || _) else preds.reduce(_ && _))
@@ -868,7 +876,8 @@ object QueryCompiler {
       }
 
     // ranked merge: concat, restrict to final set for _and, dedup summing
-    // hybrid score, first non-null distance/score in child order.
+    // hybrid score (0 when every summand is null, as the backfill of a
+    // set-only row), first non-null distance/score in child order.
     val rankedChildren = children.zipWithIndex.collect {
       case (Compiled(_, Some(r), _), i) => r.withColumn("_child", lit(i))
     }
@@ -888,14 +897,30 @@ object QueryCompiler {
         Some(restricted
           .groupBy(IdCol)
           .agg(
-            sum(HybridScoreCol).cast(FloatType).as(HybridScoreCol),
+            coalesce(sum(HybridScoreCol).cast(FloatType), lit(0.0f)).as(HybridScoreCol),
             expr(s"min_by($DistanceCol, _child) FILTER (WHERE $DistanceCol IS NOT NULL)")
               .as(DistanceCol),
             expr(s"min_by($ScoreCol, _child) FILTER (WHERE $ScoreCol IS NOT NULL)")
               .as(ScoreCol))
           .select(col(IdCol), col(DistanceCol), col(ScoreCol), col(HybridScoreCol)))
       }
-    Compiled(set, ranked)
+    ranked match {
+      case Some(r) if children.forall(_.setFromRanked) =>
+        Compiled(Ids(r.select(IdCol)), ranked, setFromRanked = true)
+      case _ => Compiled(set, ranked)
+    }
+  }
+
+  /** `df` as a driver-local frame: reused as is when its optimized plan
+    * already is a `LocalRelation` (0 jobs), else collected once into one.
+    * For bounded frames only — a ranked top-k.
+    */
+  private[engine] def local(df: DataFrame): DataFrame = {
+    LocalFold.register(df.sparkSession)
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation if !l.isStreaming => df
+      case _ => org.apache.spark.sql.graft.Bridge.collectLocal(df)
+    }
   }
 
   /** Materialize a set representation to a distinct `_id` DataFrame. */

@@ -137,9 +137,9 @@ object Search {
     val distinctLeaves = allLeaves.distinct
     // how many REQUESTS consume each leaf — not how many distinct leaves a
     // group holds: a single leaf shared by K requests still wants the
-    // EAGER Many-compile, because each consuming request's merge pins
-    // (localCheckpoints) its ranked children separately, and a lazy shared
-    // plan would re-execute the leaf's scoring K times
+    // EAGER Many-compile, because each consuming request's merge collects
+    // its ranked children separately, and a lazy shared plan would
+    // re-execute the leaf's scoring K times
     val consumers = allLeaves.groupBy(identity).map { case (q, qs) => (q, qs.size) }
     val pre = scala.collection.mutable.Map[Query, QueryCompiler.Compiled]()
     // a group with ONE distinct leaf consumed by ONE request has nothing
@@ -195,7 +195,13 @@ object Search {
   def searchManyJson(col0: Collection, jsons: Seq[String]): Seq[DataFrame] =
     searchMany(col0, jsons.map(Json.parseSearchRequest))
 
-  /** The post-compile pipeline: backfill → sort → offset/limit → select. */
+  /** The post-compile pipeline: backfill → sort → offset/limit → select.
+    * A `setFromRanked` compile (every ranked leaf, and a merge whose
+    * children all rank) backfills from its ranked frame alone: not at all
+    * for a metadata-only default-order page, by point read on a store, or
+    * by one broadcast join otherwise. Any other compile restricts the
+    * collection to its set and left-joins the ranked scores.
+    */
   private def assemble(
       col0: Collection, req: SearchRequest,
       compiled: QueryCompiler.Compiled): DataFrame = {
@@ -230,9 +236,11 @@ object Search {
         // request (the flagship QPS floor after the candidate-bounded
         // re-rank landed). A select that resolves to NO data column
         // (`["_id"]`, or only unknown paths — which project() silently
-        // drops) is metadata-only in the same sense. When ranked is a
-        // driver-local relation (the graph re-rank, the fused text
-        // batch) the page below folds to one too (LocalFold): zero jobs.
+        // drops) is metadata-only in the same sense. A hybrid whose
+        // children all rank takes this branch too (QueryCompiler.merge).
+        // When ranked is a driver-local relation (the graph re-rank, the
+        // fused text batch, a merge) the page below folds to one too
+        // (LocalFold): zero jobs.
         ranked
       case Some(ranked) if compiled.setFromRanked && col0.pointLookup.isDefined =>
         // leaf case with select/sort on a STORE-served collection: the set
@@ -243,16 +251,13 @@ object Search {
         // this, the broadcast build executed the ranked subtree (scan 1)
         // and the probe side re-read the collection in full (scan 2) — the
         // serving cost of every select-bearing request. Collecting here
-        // makes the STORE path eager by one bounded job; the plain
-        // plain-Collection path below stays fully lazy (a composable library
-        // frame must not run jobs at plan time — only the serving facade,
-        // which executes per request anyway, buys eagerness for pruning).
-        val spark = col0.df.sparkSession
-        val rows = ranked.collect()
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), ranked.schema)
-        val idIdx = ranked.schema.fieldIndex(IdCol)
-        val ids = rows.map(_.getString(idIdx)).toSeq
+        // makes the STORE path eager by one bounded job (none when ranked
+        // is already driver-local); the plain-Collection path below stays
+        // fully lazy (a composable library frame must not run jobs at plan
+        // time — only the serving facade, which executes per request
+        // anyway, buys eagerness for pruning).
+        val local = QueryCompiler.local(ranked)
+        val ids = local.select(IdCol).collect().map(_.getString(0)).toSeq
         col0.pointLookup.get(ids).join(broadcast(local), Seq(IdCol), "inner")
       case Some(ranked) if compiled.setFromRanked =>
         // plain-Collection leaf case: one inner broadcast join does

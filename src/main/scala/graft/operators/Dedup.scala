@@ -217,85 +217,6 @@ object Dedup {
       df: DataFrame, id: Column, text: Column,
       n: Int = 3, threshold: Double = 0.5,
       maxShingleDf: Option[Int] = None): DataFrame = {
-    val (base, cand) = ngramJaccardStages(df, id, text, n, threshold, maxShingleDf)
-    ngramJaccardVerify(base, cand, threshold)
-  }
-
-  /** Exact verification over already-built PPJoin stages — shared with
-    * ScaleSmoke, which must time candidates and verification from the
-    * SAME stages (re-deriving them would double the measured work).
-    * array_intersect (not a UDF) on purpose: it consumes the array data
-    * as raw UTF8Strings inside codegen, where a Scala UDF would first
-    * materialize 2×|A| java Strings per candidate pair — measured 2×
-    * slower than the intersect.
-    */
-  private[graft] def ngramJaccardVerify(
-      base: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
-    val setsA = base.select(col("_pid").as("id_a"), col("_sh").as("_sha"), col("_cnt").as("ca"))
-    val setsB = base.select(col("_pid").as("id_b"), col("_sh").as("_shb"), col("_cnt").as("cb"))
-    // HASH, not sort-merge, joins: after the first join every candidate
-    // row carries a full shingle array (~KB-wide), and SMJ would SORT
-    // that stream — measured at a 100× corpus (500k docs, ~5M
-    // candidates) the id_b-side sort spilled the entire 78 GB disk. The
-    // build side is the per-doc shingle table (corpus-linear, hashed per
-    // partition — bounded by partition count, AQE-splittable), so the
-    // wide candidate stream just probes and never sorts.
-    cand.join(setsA.hint("shuffle_hash"), "id_a")
-      .join(setsB.hint("shuffle_hash"), "id_b")
-      .withColumn("common", size(array_intersect(col("_sha"), col("_shb"))))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("ca") + col("cb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** The PPJoin stages BEFORE exact verification: (shingled base frame,
-    * candidate id pairs). Exposed `private[graft]` for scale diagnostics —
-    * ScaleSmoke measures how candidates grow with corpus size, which is
-    * the claim ("candidates ≈ near-dups, not co-occurrences") that makes
-    * this operator survive a 1000× corpus.
-    */
-  /** Postings + PPJoin prefix frame from a shingled `base`
-    * (`_pid`, `_sh`, `_cnt`) — THE prefix derivation. Returns (postings,
-    * prefix postings).
-    */
-  private def prefixStage(
-      base: DataFrame, threshold: Double,
-      maxShingleDf: Option[Int]): (DataFrame, DataFrame) = {
-    val posts = base.select(col("_pid"), col("_cnt"), explode(col("_sh")).as("_s"))
-    // global document frequency per shingle as groupBy + join-back, NOT a
-    // count-over-window: WindowExec has no map-side partial aggregation, so
-    // a stop-shingle appearing in 30% of a 100 TB corpus would funnel every
-    // one of its postings into ONE task — a wall, not a slowdown. The
-    // groupBy absorbs hot keys map-side (partial_count per partition), and
-    // the join back is AQE-skew-splittable where a window never is.
-    val dfTable = posts.groupBy("_s").agg(count(lit(1)).as("_df"))
-    // the cap prunes the df TABLE before the join, so stop-shingle postings
-    // are dropped by the inner join — before the per-doc ranking window ever
-    // sees them
-    val dfKept = maxShingleDf match {
-      case None => dfTable
-      case Some(cap) => dfTable.filter(col("_df") <= cap)
-    }
-    val withDf = posts.join(dfKept, "_s")
-    // rank shingles per doc by (global df asc, shingle asc); keep the prefix
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid").orderBy(col("_df").asc, col("_s").asc)
-    val tauD = lit(threshold).cast("decimal(12,6)")
-    val prefix = withDf
-      .withColumn("_rank", row_number().over(w))
-      // exact prefix bound: the threshold multiplies as DECIMAL, not
-      // DOUBLE — an fp product one ulp above the true integer would
-      // shorten the prefix and silently drop qualifying pairs
-      .filter(col("_rank") <= col("_cnt") - ceil(tauD * col("_cnt")) + 1)
-      .select("_pid", "_s", "_rank", "_cnt")
-    (posts, prefix)
-  }
-
-  private[graft] def ngramJaccardStages(
-      df: DataFrame, id: Column, text: Column,
-      n: Int, threshold: Double,
-      maxShingleDf: Option[Int]): (DataFrame, DataFrame) = {
     // materialize the shingle arrays once: base feeds three consumers
     // (postings, and both verification sides). Eager checkpoint, not
     // persist() — a CacheManager entry would outlive the call with no
@@ -304,7 +225,7 @@ object Dedup {
     val base = shingled(df, id, text, n)
       .withColumn("_cnt", size(col("_sh")))
       .localCheckpoint()
-    val (_, prefix) = prefixStage(base, threshold, maxShingleDf)
+    val prefix = prefixStage(base, threshold, maxShingleDf)
     // the same DECIMAL threshold the prefix bound used (prefixStage) — the
     // candidate filters below must replay it exactly
     val tauD = lit(threshold).cast("decimal(12,6)")
@@ -328,7 +249,61 @@ object Dedup {
         (lit(1) + tauD) >= tauD * (col("_ca") + col("_cb")))
       .select("id_a", "id_b")
       .distinct()
-    (base, cand)
+    // exact verification: array_intersect (not a UDF) on purpose — it
+    // consumes the array data as raw UTF8Strings inside codegen, where a
+    // Scala UDF would first materialize 2×|A| java Strings per candidate
+    // pair (measured 2× slower than the intersect)
+    val setsA = base.select(col("_pid").as("id_a"), col("_sh").as("_sha"), col("_cnt").as("ca"))
+    val setsB = base.select(col("_pid").as("id_b"), col("_sh").as("_shb"), col("_cnt").as("cb"))
+    // HASH, not sort-merge, joins: after the first join every candidate
+    // row carries a full shingle array (~KB-wide), and SMJ would SORT
+    // that stream — measured at a 100× corpus (500k docs, ~5M
+    // candidates) the id_b-side sort spilled the entire 78 GB disk. The
+    // build side is the per-doc shingle table (corpus-linear, hashed per
+    // partition — bounded by partition count, AQE-splittable), so the
+    // wide candidate stream just probes and never sorts.
+    cand.join(setsA.hint("shuffle_hash"), "id_a")
+      .join(setsB.hint("shuffle_hash"), "id_b")
+      .withColumn("common", size(array_intersect(col("_sha"), col("_shb"))))
+      .withColumn("jaccard",
+        col("common").cast("double") / (col("ca") + col("cb") - col("common")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** PPJoin prefix postings (`_pid`, `_s`, `_rank`, `_cnt`) from a
+    * shingled `base` (`_pid`, `_sh`, `_cnt`) — THE prefix derivation.
+    */
+  private def prefixStage(
+      base: DataFrame, threshold: Double,
+      maxShingleDf: Option[Int]): DataFrame = {
+    val posts = base.select(col("_pid"), col("_cnt"), explode(col("_sh")).as("_s"))
+    // global document frequency per shingle as groupBy + join-back, NOT a
+    // count-over-window: WindowExec has no map-side partial aggregation, so
+    // a stop-shingle appearing in 30% of a 100 TB corpus would funnel every
+    // one of its postings into ONE task — a wall, not a slowdown. The
+    // groupBy absorbs hot keys map-side (partial_count per partition), and
+    // the join back is AQE-skew-splittable where a window never is.
+    val dfTable = posts.groupBy("_s").agg(count(lit(1)).as("_df"))
+    // the cap prunes the df TABLE before the join, so stop-shingle postings
+    // are dropped by the inner join — before the per-doc ranking window ever
+    // sees them
+    val dfKept = maxShingleDf match {
+      case None => dfTable
+      case Some(cap) => dfTable.filter(col("_df") <= cap)
+    }
+    val withDf = posts.join(dfKept, "_s")
+    // rank shingles per doc by (global df asc, shingle asc); keep the prefix
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("_pid").orderBy(col("_df").asc, col("_s").asc)
+    val tauD = lit(threshold).cast("decimal(12,6)")
+    withDf
+      .withColumn("_rank", row_number().over(w))
+      // exact prefix bound: the threshold multiplies as DECIMAL, not
+      // DOUBLE — an fp product one ulp above the true integer would
+      // shorten the prefix and silently drop qualifying pairs
+      .filter(col("_rank") <= col("_cnt") - ceil(tauD * col("_cnt")) + 1)
+      .select("_pid", "_s", "_rank", "_cnt")
   }
 
   /** MinHash base hashes: two independent 30-bit hashes per shingle

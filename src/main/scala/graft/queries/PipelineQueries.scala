@@ -272,7 +272,7 @@ object PipelineQueries {
     // localCheckpoint, NOT persist(): a CacheManager entry has no release
     // handle here and would accumulate across bench/driver rounds, while
     // checkpoint blocks are GC-reclaimed once the returned frame drops
-    // (the same rule Dedup.ngramJaccardStages documents)
+    // (the same rule Dedup.ngramJaccardPairs documents)
     val kept1 = tokd
       .filter(langExpr === "en" && qualExpr >= 0.5)
       .select(col("doc_id"), col("text"), col("source"))
@@ -865,10 +865,9 @@ object PipelineQueries {
     * Regenerate after an intentional change via
     * `python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/v multimodal_video`.
     */
-  /** The gate's per-document GIF synthesis — ONE definition shared with
-    * ScaleSmoke so the smoke benchmark measures exactly the gated
-    * workload (drifting copies would silently make its "codec cost
-    * stays flat" numbers incomparable).
+  /** The per-document GIF synthesis — ONE definition shared by the
+    * `multimodal_video` and `multimodal_video_pairs` gates, whose goldens
+    * both hash its frames.
     */
   val videoSynthGif: Long => Array[Byte] = id =>
     Multimodal.synthGif(

@@ -13,6 +13,12 @@ object Bridge {
   def toColumn(e: Expression): Column = new Column(ExpressionColumnNode(e))
   def toExpression(c: Column): Expression = ColumnConversions.expression(c)
 
+  /** `e` with NaN and −0.0 normalized as Spark normalizes grouping and
+    * join keys before hashing them (`normalize` is `private[sql]`).
+    */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** `AbstractDataType` is `private[sql]`; expressions outside the spark
     * package need this alias to declare `inputTypes` for analyzer-side
     * implicit casting.
@@ -32,6 +38,17 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** `df`'s rows, collected once, as a frame over a `LocalRelation` in
+    * `df`'s session: every later plan reads them as a job-free
+    * LocalTableScan (`ofRows` is `private[sql]`).
+    */
+  def collectLocal(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation.fromExternalRows(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema),
+        df.toDF().collect().toSeq))
 
   /** A clone of `session` sharing its SparkContext, SharedState (external
     * catalog, cache manager) and a COPY of its SessionState (runtime conf,

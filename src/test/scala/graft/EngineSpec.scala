@@ -328,6 +328,143 @@ class EngineSpec extends SparkSuite {
     }
   }
 
+  // The fold laws below build each frame twice: on this session, where
+  // LocalFold is registered, and on `plain`, where Spark runs it in jobs.
+  // Rows are compared as multisets of raw bits (hash aggregates emit groups
+  // in hash order), schemas by name, type and nullability.
+  private object foldInputs {
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("c", IntegerType)))
+    val nan = Double.NaN
+    // duplicate keys, a null key group, NaN, −0.0 tied with +0.0 (as keys
+    // and as summands), null values, and a group ("x", c ≤ 2) that the
+    // `c > 4` FILTER excludes entirely
+    val left = Seq(
+      Row("x", 1.5, 1.0f, 1), Row("x", -0.0, -0.0f, 2),
+      Row("y", 0.0, 0.0f, 3), Row("y", nan, java.lang.Float.NaN, 4),
+      Row(null, 2.0, 2.0f, 5), Row(null, 3.0, 3.0f, 6),
+      Row("z", null, null, 7), Row("v", -0.0, 0.5f, 8))
+    val right = Seq(
+      Row("x", nan, 9.0f, 3), Row("x", 0.0, 8.0f, 0),
+      Row(null, 2.0, 7.0f, 9), Row("u", -0.0, 6.0f, 9))
+    def frame(s: SparkSession, rows: Seq[Row]): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def a(s: SparkSession) = frame(s, left)
+    def b(s: SparkSession) = frame(s, right)
+    def empty(s: SparkSession) = frame(s, Nil)
+  }
+
+  private def bits(rows: Seq[org.apache.spark.sql.Row]): Seq[String] =
+    rows.map(_.toSeq.map {
+      case d: Double => s"d${java.lang.Double.doubleToRawLongBits(d)}"
+      case f: Float => s"f${java.lang.Float.floatToRawIntBits(f)}"
+      case x => String.valueOf(x)
+    }.mkString("|")).sorted
+
+  private def foldLaw(clue: String, unfolded: org.apache.spark.sql.SparkSession = plain)(
+      build: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame): Unit = {
+    graft.engine.LocalFold.register(spark)
+    val ((got, gotRows), jobs) = countJobs("graft-fold-law") {
+      val f = build(spark)
+      (f, f.collect().toSeq)
+    }
+    assertFolded(got, jobs, clue)
+    val want = build(unfolded)
+    assert(got.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      want.schema.map(f => (f.name, f.dataType, f.nullable)), clue)
+    assert(bits(gotRows) == bits(want.collect().toSeq), clue)
+  }
+
+  test("LocalFold: Union ≡ Spark's union") {
+    import foldInputs._
+    foldLaw("a ∪ b")(s => a(s).union(b(s)))
+    foldLaw("a ∪ b ∪ a")(s => a(s).union(b(s)).union(a(s)))
+    foldLaw("a ∪ ∅")(s => a(s).union(empty(s)))
+    foldLaw("by name")(s => b(s).select("c", "f", "d", "k").unionByName(a(s)))
+  }
+
+  test("LocalFold: Complete-mode declarative Aggregate ≡ Spark's hash aggregate") {
+    import foldInputs._
+    foldLaw("by string key")(s => a(s).union(b(s)).groupBy("k").agg(
+      sum("d"), sum("f"), count(lit(1)), count("d"), min_by(col("d"), col("c")),
+      max_by(col("f"), col("c")), min(col("k")),
+      expr("sum(d) FILTER (WHERE c > 4)"),
+      expr("min_by(f, c) FILTER (WHERE d IS NOT NULL)")))
+    foldLaw("by double key: NaN and ±0.0 group")(s => a(s).union(b(s)).groupBy("d")
+      .agg(count(lit(1)), sum("c"), max("k")))
+    foldLaw("result expressions over groups")(s => a(s).groupBy(col("c") % 2)
+      .agg((sum("c") * 2 + 1).as("e"), coalesce(sum("d").cast("float"), lit(0.0f)).as("z")))
+    foldLaw("global")(s => a(s).agg(sum("d"), count(lit(1)), min_by(col("k"), col("c"))))
+    foldLaw("global over ∅: one initial row")(s => empty(s).agg(sum("d"), count(lit(1))))
+    foldLaw("grouped over ∅")(s => empty(s).groupBy("k").agg(sum("d")))
+    foldLaw("distinct()")(s => a(s).union(b(s)).select("k").distinct())
+    foldLaw("distinct() on doubles")(s => a(s).union(b(s)).select("d").distinct())
+  }
+
+  test("LocalFold: equi LeftSemi join ≡ Spark's; null keys never match") {
+    import foldInputs._
+    foldLaw("string keys")(s => a(s).join(b(s), Seq("k"), "left_semi"))
+    foldLaw("double keys: NaN = NaN, −0.0 = +0.0")(s =>
+      a(s).join(b(s).select(col("d").as("d2")), col("d") === col("d2"), "left_semi"))
+    // Spark infers isnotnull filters for plain attribute keys, which fold
+    // away before the join does; CASE keys get none, so nulls reach it
+    foldLaw("nullable key expressions")(s =>
+      a(s).join(b(s).select(col("k").as("k2"), col("c").as("c2")),
+        when(col("c") < 7, col("k")) === when(col("c2") < 100, col("k2")), "left_semi"))
+    foldLaw("null-safe keys")(s =>
+      a(s).join(b(s).select(col("k").as("k2")), col("k") <=> col("k2"), "left_semi"))
+    foldLaw("with a non-equi condition")(s =>
+      a(s).join(b(s).select(col("k").as("k2"), col("c").as("c2")),
+        col("k") === col("k2") && col("c") < col("c2"), "left_semi"))
+    foldLaw("∅ right")(s => a(s).join(empty(s), Seq("k"), "left_semi"))
+    foldLaw("∅ left")(s => empty(s).join(b(s), Seq("k"), "left_semi"))
+  }
+
+  test("LocalFold: the hybrid merge shape folds; 3+ summands against one partition") {
+    import foldInputs._
+    import org.apache.spark.sql.SparkSession
+    // three ranked children with overlapping ids: a 3-way double sum, whose
+    // order in Spark's partial/final aggregate depends on how the input is
+    // partitioned — so the unfolded side reads a single partition, where it
+    // sums in input order as the fold does
+    val onePartition = spark.newSession()
+    onePartition.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+    def merged(s: SparkSession) = {
+      val kids = Seq(a(s), b(s), a(s).filter(col("c") > 3)).zipWithIndex.map { case (f, i) =>
+        f.select(col("k").as("_id"), col("f").as("_distance"),
+          when(col("c") % 2 === 0, col("f")).as("_score"),
+          (col("d") * 0.1).cast("float").as("_hybridScore"))
+          .withColumn("_child", lit(i))
+      }
+      val ids = kids.map(_.select("_id")).reduce(_.join(_, Seq("_id"), "left_semi"))
+      kids.reduce(_ unionByName _).join(ids, Seq("_id"), "left_semi").groupBy("_id").agg(
+        coalesce(sum("_hybridScore").cast("float"), lit(0.0f)).as("_hybridScore"),
+        expr("min_by(_distance, _child) FILTER (WHERE _distance IS NOT NULL)").as("_distance"),
+        expr("min_by(_score, _child) FILTER (WHERE _score IS NOT NULL)").as("_score"))
+    }
+    foldLaw("_and of three", onePartition)(merged)
+    foldLaw("_or of three", onePartition)(s => merged(s).union(merged(s)).distinct())
+  }
+
+  test("LocalFold: imperative, non-deterministic and distinct aggregates stay unfolded") {
+    import foldInputs._
+    graft.engine.LocalFold.register(spark)
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame)](
+      "collect_list" -> a(spark).groupBy("k").agg(collect_list("d")),
+      // Spark rejects rand() inside an aggregate's arguments and folds a
+      // rand() projection below it, so it sits in the result expression
+      "rand()" -> a(spark).groupBy("k").agg((sum("c") + rand(7)).as("r")),
+      "count(DISTINCT d)" -> a(spark).groupBy("k").agg(count_distinct(col("d"))))
+    for ((clue, df) <- cases) {
+      assert(!df.queryExecution.executedPlan
+        .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], clue)
+      assert(df.collect().length == 5, clue)
+    }
+  }
+
   test("schema validation: reserved property names and NaN bounds fail closed") {
     import graft.model.{IndexKind, IndexSchema}
     assert(IndexSchema.validate(IndexSchema("_and" -> IndexKind.Integer)).isLeft)

@@ -115,6 +115,33 @@ class VamanaServeSpec extends SparkSuite {
     // over driver-local data: the warmed repeat launches no job at all
     assert(jobs == 0, s"expected a job-free serve, saw $jobs jobs")
   }
+  test("a metadata-only hybrid over the local graph costs its text leaf's jobs and no more") {
+    import model._
+    assert(idx.local.isDefined)
+    val text = Query("text", text = Some(TextOpts("spark filter merge", Op.ContainsAny, 20,
+      weight = Some(2.0f))))
+    def vamana(q: Int) = Query("vec_l2", vectorVamana = Some(VectorVamanaOpts(
+      qvecs(q), Op.Near, searchSize = 75, limit = 10, weight = Some(0.5f), approx = true)))
+    def hybrid(q: Int) = SearchRequest(Query("_or", or = Seq(vamana(q), text)), limit = 10)
+    def run(req: SearchRequest): Seq[String] =
+      engine.Search.search(coll, req).select("_id").as[String].collect().toSeq
+    // warmed: the graph snapshot and the text index's plans
+    run(hybrid(0)); run(SearchRequest(text, limit = 10))
+    val (_, textJobs) = countJobs("graft-hybrid-text")(run(SearchRequest(text, limit = 10)))
+    val (_, hybridJobs) = countJobs("graft-hybrid")(run(hybrid(0)))
+    assert(textJobs > 0)
+    // the merge collects the text leaf once; the graph leaf, the merge and
+    // the page all fold to driver-local relations
+    assert(hybridJobs == textJobs, s"hybrid ran $hybridJobs jobs, its text leaf $textJobs")
+
+    // two hybrids sharing the text leaf: searchMany compiles the leaves
+    // eagerly, and each answer frame is a job-free LocalTableScan
+    val frames = engine.Search.searchMany(coll, Seq(hybrid(1), hybrid(2)))
+    val (rows, collectJobs) = countJobs("graft-hybrid-many")(frames.map(_.collect().toSeq))
+    assert(collectJobs == 0, s"collecting the batch ran $collectJobs jobs")
+    assert(rows.map(_.map(_.getString(0))) == Seq(hybrid(1), hybrid(2)).map(run))
+  }
+
   test("past-budget serving fetches from a _gid-bucketed table with pruned buckets") {
     // force the distributed regime over the real artifact, with a serve
     // cache target like the store-backed attach provides
