@@ -680,50 +680,43 @@ object QueryCompiler {
 
   // ---- text search --------------------------------------------------------
 
-  /** Term postings for a text property: one row per (doc, term) with the
-    * term frequency and analyzed document length. At scale this is the
-    * derived "index DataFrame" — cache/persist it per collection rather
-    * than recomputing per query (the reference maintains it incrementally
-    * in bbolt buckets, text.go:151–258; batch recompute is the Spark-native
-    * equivalent). Delegates to [[TextIndex.compute]] — a second postings
-    * formulation here had already drifted (explode vs explode_outer) from
-    * the null-term-row convention the index's numDocs bookkeeping needs.
+  /** The text index a query over `prop` scores against: the installed
+    * one, or else an ad-hoc [[TextIndex.adHoc]] over the collection. Its
+    * lazy postings are deliberately not persisted: this path serves only
+    * collections without an installed index (direct engine use, or the
+    * facade's CAS-race window), and a materialization here would have no
+    * owner to release it.
     */
-  def postings(col0: Collection, prop: String): DataFrame =
-    TextIndex.compute(col0.df, prop)._1
+  private def textIndex(col0: Collection, prop: String): TextIndex =
+    col0.textIndexes.getOrElse(prop, TextIndex.adHoc(col0.df, prop))
+
+  /** The postings restricted to `terms`, each row carrying its term's
+    * document frequency `_df` as a literal lookup into the index's
+    * `docFreq` (every query term is a key, so the lookup never misses).
+    */
+  private def termPostings(index: TextIndex, terms: Seq[String]): DataFrame = {
+    val df = typedLit(terms.map(t => t -> index.docFreq.getOrElse(t, 0L)).toMap)
+    index.postings.filter(col("_term").isin(terms: _*))
+      .withColumn("_df", element_at(df, col("_term")))
+  }
 
   /** tf-idf scored text search (reference text.go:305–396):
     * score(doc) = Σ_t∈queryTerms (freq_t/docLen) * log10(numDocs/(df_t+1)),
     * over the containsAll/containsAny matched set, optionally intersected
     * with a pre-filter, sorted desc and truncated to `limit`. df/idf are
-    * computed over ALL docs with the property — the pre-filter narrows the
-    * candidate set, not the statistics (text.go:328–334 intersects after
-    * the posting-set merge).
+    * the index's, over ALL docs with the property — the pre-filter narrows
+    * the candidate set, not the statistics (text.go:328–334 intersects
+    * after the posting-set merge).
     */
   private def textSearch(col0: Collection, prop: String, o: TextOpts): Compiled = {
     val terms = TextAnalyzer.analyzeString(o.value).distinct
     if (terms.isEmpty)
       throw new IllegalArgumentException("text query value has no terms after analysis")
-    // prebuilt (persisted) index when attached; otherwise an ad-hoc LAZY
-    // one. Deliberately not checkpointed/persisted: this path serves only
-    // collections without an installed index (direct engine use, or the
-    // facade's CAS-race window), and a materialization here would have no
-    // owner to release it — the recompute (postings feed two sides of the
-    // plan) is the leak-free trade on a rare path.
-    val index = col0.textIndexes.getOrElse(prop, {
-      val (p, n) = TextIndex.compute(col0.df, prop)
-      TextIndex(p, n)
-    })
-    val post = index.postings
+    val index = textIndex(col0, prop)
     val numDocs = index.numDocs // numDocs of the text index (text.go:371)
 
-    // document frequency per query term, computed once and broadcast
-    val qterms = post.filter(col("_term").isin(terms: _*))
-    val dfTable = qterms.groupBy("_term").agg(count(lit(1)).as("_df"))
-
     // matched docs: per-doc count of distinct matched query terms
-    val perDoc = qterms
-      .join(broadcast(dfTable), "_term")
+    val perDoc = termPostings(index, terms)
       .groupBy(IdCol)
       .agg(
         count(lit(1)).as("_nterms"),
@@ -756,16 +749,15 @@ object QueryCompiler {
     * property (Search.searchMany's text batchable group —
     * round-12 verdict item #3; hybrid serving workloads are text+vector,
     * and before this only the vector half amortized): each text leaf
-    * alone pays a postings scan + a df aggregation + a per-doc grouped
-    * score — the dominant text serving cost at corpus scale. A batch
-    * shares all three: ONE postings restriction to the UNION of the
-    * group's query terms, ONE df table over it (per-term df values are
-    * identical to the single route's — df_t counts postings rows with
-    * term t regardless of which query asked), ONE groupBy(doc) with K
-    * conditional (score, matched-term-count) column pairs, and ONE
-    * bounded per-query top-k (TopKStrMultiAgg, per-query k = limit)
-    * whose ranking key replays `orderBy(score32 desc, id asc)` exactly:
-    * the NEGATED float32 score widened to double (exact), ascending,
+    * alone pays a postings scan + a per-doc grouped score — the dominant
+    * text serving cost at corpus scale. A batch shares both: ONE postings
+    * restriction to the UNION of the group's query terms (each row's df
+    * looked up in the index's `docFreq`, as the single route does), ONE
+    * groupBy(doc) with K conditional (score, matched-term-count) column
+    * pairs, and ONE bounded per-query top-k (TopKStrMultiAgg, per-query
+    * k = limit) whose ranking key replays `orderBy(score32 desc, id
+    * asc)` exactly: the NEGATED float32 score widened to double (exact),
+    * ascending,
     * with `+ 0.0` collapsing a −0.0 score onto +0.0 (Spark's comparator
     * treats them equal; `Double.compare` would not). Ineligible docs
     * (containsAll misses) rank as NaN = excluded.
@@ -786,16 +778,9 @@ object QueryCompiler {
         throw new IllegalArgumentException("text query value has no terms after analysis")
       ts
     }
-    val index = col0.textIndexes.getOrElse(prop, {
-      val (p, n) = TextIndex.compute(col0.df, prop)
-      TextIndex(p, n)
-    })
-    val post = index.postings
+    val index = textIndex(col0, prop)
     val numDocs = index.numDocs
-    val unionTerms = termsPer.flatten.distinct
-    val qterms = post.filter(col("_term").isin(unionTerms: _*))
-    val dfTable = qterms.groupBy("_term").agg(count(lit(1)).as("_df"))
-    val joined = qterms.join(broadcast(dfTable), "_term")
+    val joined = termPostings(index, termsPer.flatten.distinct)
     val contrib = (col("_freq").cast("double") / col("_doclen").cast("double")) *
       log10(lit(numDocs.toDouble) / (col("_df").cast("double") + 1.0))
     val aggCols = termsPer.zipWithIndex.flatMap { case (ts, i) => Seq(

@@ -54,7 +54,7 @@ object Search {
     * group's probed cells with each query's column guarded to its OWN
     * cells, so per-query partition pruning survives batching. Single-leaf,
     * unfiltered TEXT requests against one property share the postings
-    * restriction, the df table, and one fused per-doc scoring aggregate
+    * restriction and one fused per-doc scoring aggregate
     * (compileTextMany). Batchable leaves are harvested from ANYWHERE in a
     * request's query tree (round 12): a hybrid `_and`/`_or` of text +
     * vector leaves decomposes into the same fused families — the leaves
@@ -111,7 +111,7 @@ object Search {
           }
         case _ => None
       }
-    // single-leaf, unfiltered text queries share postings/df work per
+    // single-leaf, unfiltered text queries share postings work per
     // property (compileTextMany) — hybrid serving workloads are
     // text+vector, so the text half must amortize too
     def textTag(q: Query): Option[String] = q.text match {

@@ -123,8 +123,8 @@ object TextQueries {
   /** Batch-amortized TEXT serving (round 12): three complete text
     * requests — mixed containsAny/containsAll, limits and weights — go
     * through Search.searchMany in ONE call: the group shares one
-    * postings restriction (union of all query terms), one df table, one
-    * fused per-doc conditional-scoring aggregate and one bounded
+    * postings restriction (union of all query terms), one fused
+    * per-doc conditional-scoring aggregate and one bounded
     * per-query top-k (QueryCompiler.compileTextMany). Results are
     * per-request identical to independent searches (SearchManySpec text
     * laws, 4-decimal rounding — the float32 cast absorbs per-term sum

@@ -64,6 +64,23 @@ class GraftSpec extends SparkSuite {
     assert(db.listCollections().isEmpty)
   }
 
+  /** The installed `t` index's statistics equal a from-scratch rebuild's
+    * over the same view: `numDocs` and every `docFreq` entry, no term of
+    * its own postings missing and no entry ≤ 0.
+    */
+  private def assertIndexExact(db: Graft, name: String): Unit = {
+    val idx = db.collection(name).textIndexes("t")
+    val rebuilt = graft.engine.TextIndex.build(db.collection(name).df, "t")
+    try {
+      assert(idx.numDocs == rebuilt.numDocs)
+      assert(idx.docFreq == rebuilt.docFreq)
+      assert(idx.docFreq.values.forall(_ > 0), idx.docFreq)
+      val terms = idx.postings.filter(col("_term").isNotNull).select("_term").distinct()
+        .as[String].collect().toSet
+      assert(idx.docFreq.keySet == terms)
+    } finally rebuilt.release()
+  }
+
   test("text index is patched per write — numDocs tracks the live corpus") {
     val db = Graft(spark, Fs.tempDir("graft_db_").toString)
     val schema = IndexSchema("t" -> Text())
@@ -77,20 +94,26 @@ class GraftSpec extends SparkSuite {
     assert(db.search("docs", q("bird")).collect().map(_.getString(0)).sorted.toSeq
       == Seq("a", "b"))
     assert(db.collection("docs").textIndexes("t").numDocs == 3)
+    assertIndexExact(db, "docs")
 
     db.insert("docs", Seq(("d", "delta bird")).toDF("_id", "t"))
     assert(db.collection("docs").textIndexes("t").numDocs == 4)
+    assertIndexExact(db, "docs")
     assert(db.search("docs", q("bird")).collect().map(_.getString(0)).sorted.toSeq
       == Seq("a", "b", "d"))
 
     // sentinel-delete the text of a → drops out of the index (null prop)
     db.update("docs", Seq(("a", "_delete")).toDF("_id", "t"))
     assert(db.collection("docs").textIndexes("t").numDocs == 3)
+    assertIndexExact(db, "docs")
+    // alpha's last document left: the term leaves docFreq
+    assert(!db.collection("docs").textIndexes("t").docFreq.contains("alpha"))
     assert(db.search("docs", q("bird")).collect().map(_.getString(0)).sorted.toSeq
       == Seq("b", "d"))
 
     db.delete("docs", Seq("b"))
     assert(db.collection("docs").textIndexes("t").numDocs == 2)
+    assertIndexExact(db, "docs")
     assert(db.search("docs", q("bird")).collect().map(_.getString(0)).toSeq == Seq("d"))
   }
 
@@ -106,23 +129,25 @@ class GraftSpec extends SparkSuite {
     db.search("docs", q("bird")).collect()
     // token-less doc b still counts toward numDocs (it has non-null text)
     assert(db.collection("docs").textIndexes("t").numDocs == 3)
+    assertIndexExact(db, "docs")
 
     // drive 10 single-row writes through the patch path — crosses the
     // CompactEvery fold and keeps exercising token-less transitions
     db.update("docs", Seq(("a", "")).toDF("_id", "t"))          // tokened → token-less
     assert(db.collection("docs").textIndexes("t").numDocs == 3)
+    assertIndexExact(db, "docs")
     db.update("docs", Seq(("b", "beta bird")).toDF("_id", "t")) // token-less → tokened
     assert(db.collection("docs").textIndexes("t").numDocs == 3)
+    assertIndexExact(db, "docs")
     (0 until 8).foreach { i =>
       db.insert("docs", Seq((s"n$i", s"extra bird $i")).toDF("_id", "t"))
+      assertIndexExact(db, "docs")
     }
     val idx = db.collection("docs").textIndexes("t")
     assert(idx.numDocs == 11)
+    assert(idx.patchDepth == 2) // 10 patches: compacted at the 8th
+    assert(idx.docFreq("bird") == 9 && idx.docFreq("extra") == 8)
     assert(db.search("docs", q("bird")).collect().length == 9) // b + n0..n7; not a/c
-    // the patched count matches a from-scratch rebuild exactly
-    val rebuilt = graft.engine.TextIndex.build(db.collection("docs").df, "t")
-    assert(idx.numDocs == rebuilt.numDocs)
-    rebuilt.release()
   }
 
   test("approx JSON search serves from the store's auto-fitted quantizer") {

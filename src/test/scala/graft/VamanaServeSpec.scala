@@ -142,6 +142,44 @@ class VamanaServeSpec extends SparkSuite {
     assert(rows.map(_.map(_.getString(0))) == Seq(hybrid(1), hybrid(2)).map(run))
   }
 
+  test("a warmed text leaf over a built index is one Spark job with no exchange; so is its hybrid") {
+    import model._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    object plans extends AdaptiveSparkPlanHelper
+    // the fixture's text index is the parquet-cached build; install the
+    // in-memory one the facade builds, partitioned by _id
+    val built = engine.TextIndex.build(coll.df, "text")
+    val c = coll.copy(textIndexes = coll.textIndexes + ("text" -> built))
+    try {
+      val text = Query("text", text = Some(TextOpts("spark filter merge", Op.ContainsAny, 20,
+        weight = Some(2.0f))))
+      val hybrid = SearchRequest(Query("_or", or = Seq(Query("vec_l2",
+        vectorVamana = Some(VectorVamanaOpts(qvecs(0), Op.Near, searchSize = 75, limit = 10,
+          weight = Some(0.5f), approx = true))), text)), limit = 10)
+      def run(req: SearchRequest) = {
+        val df = engine.Search.search(c, req)
+        (df, df.collect().toSeq)
+      }
+      // warmed: the graph snapshot and the postings cache
+      run(hybrid); run(SearchRequest(text, limit = 10))
+      val ((df, rows), textJobs) = countJobs("graft-text-leaf")(run(SearchRequest(text, limit = 10)))
+      assert(rows.nonEmpty)
+      // df is a literal lookup; the per-doc aggregate reads postings
+      // already hash-partitioned by _id
+      assert(textJobs == 1, s"the text leaf ran $textJobs jobs")
+      val exchanges = plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+        case e: BroadcastExchangeExec => e
+      }
+      assert(exchanges.isEmpty, df.queryExecution.executedPlan)
+      // the same answer as the parquet-cached index gives
+      assert(rows == engine.Search.search(coll, SearchRequest(text, limit = 10)).collect().toSeq)
+      val (_, hybridJobs) = countJobs("graft-text-hybrid")(run(hybrid))
+      assert(hybridJobs == textJobs, s"hybrid ran $hybridJobs jobs, its text leaf $textJobs")
+    } finally built.release()
+  }
+
   test("past-budget serving fetches from a _gid-bucketed table with pruned buckets") {
     // force the distributed regime over the real artifact, with a serve
     // cache target like the store-backed attach provides
