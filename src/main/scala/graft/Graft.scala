@@ -335,32 +335,25 @@ final class Graft(val spark: SparkSession, root: String,
   def search(name: String, requestJson: String): DataFrame =
     search(name, graft.model.Json.parseSearchRequest(requestJson))
 
-  def search(name: String, request: SearchRequest): DataFrame = {
-    // validate FIRST (cheap, driver-side): a malformed request must not
-    // pay a corpus tokenize/encode before being rejected
-    graft.model.Validation.validate(request)
-      .left.foreach(m => throw new IllegalArgumentException(m))
-    graft.model.Validation.validateSchema(request.query, collection(name).schema)
-      .left.foreach(m => throw new IllegalArgumentException(m))
-    ensureTextIndexes(name, textProps(request.query))
-    ensureVectorIndexes(name, approxVecProps(request.query))
-    Search.search(collection(name), request)
-  }
+  /** Serve one request: a batch of one ([[searchMany]]). */
+  def search(name: String, request: SearchRequest): DataFrame =
+    searchMany(name, Seq(request)).head
 
   /** Serve MANY requests against one collection in one call (request
     * order preserved). Index builds/attaches are ensured ONCE for the
-    * union of the batch's properties, then Search.searchMany fuses the
-    * batchable requests: graph-served requests walk as a single
-    * hop-fused wave, and full-scan flat requests share ONE multi-query
-    * candidate scan — a K-query serving batch pays ~one request's heavy
-    * work, not K× (the per-query job-scheduling floor and the candidate
-    * scan are the dominant costs of small-K serving).
+    * union of the batch's properties, then Search.searchMany compiles
+    * every batchable leaf through its family's batch route: graph-served
+    * leaves walk as a single hop-fused wave, quantized flat leaves share
+    * ONE multi-query candidate scan, and text leaves share one postings
+    * scan — a K-query serving batch pays ~one request's heavy work, not
+    * K× (the per-query job-scheduling floor and the candidate scan are the
+    * dominant costs of small-K serving).
     */
   def searchMany(name: String, requests: Seq[SearchRequest]): Seq[DataFrame] = {
-    // validate against the PRE-index view first so a malformed request
-    // fails before any index build is triggered (the single-request
-    // route's ordering); Search.searchMany re-validates against the
-    // final view, which is the one source of validation truth
+    // validate against the PRE-index view first (cheap, driver-side): a
+    // malformed request must not pay a corpus tokenize/encode before
+    // being rejected; Search.searchMany re-validates against the final
+    // view, which is the one source of validation truth
     val pre = collection(name)
     requests.foreach { r =>
       graft.model.Validation.validate(r)

@@ -86,7 +86,8 @@ object QueryCompiler {
         near(col, prop, k.metric, o.vector, o.limit, o.filter, o.weight,
           approx = o.approx, budget = vamanaBudget(o))
       case (_: IndexKind.Text, _) if q.text.isDefined =>
-        textSearch(col, prop, q.text.get)
+        val o = q.text.get
+        compileTextMany(col, prop, Seq(o), o.filter).head
       case _ => throw new IllegalArgumentException(
         s"${kind.name} query options not provided for property $prop")
     }
@@ -94,8 +95,7 @@ object QueryCompiler {
   /** The vectorVamana rescore budget — the role of the reference's beam
     * (searchSize): how many quantized candidates see an exact re-rank.
     * THE single definition: Search.searchMany groups batchable requests
-    * by this value, so a second copy of the formula would silently split
-    * batched requests from their single-request twins.
+    * by this value, and a leaf compiled alone uses it too.
     */
   private[engine] def vamanaBudget(o: VectorVamanaOpts): Int =
     math.max(o.searchSize, 2 * o.limit)
@@ -155,7 +155,9 @@ object QueryCompiler {
   // ---- vector near --------------------------------------------------------
 
   /** Exact top-k by distance — the `near` semantic for both vectorFlat and
-    * vectorVamana (recall 1.0 ≥ the reference's graph search). Plan shape is
+    * vectorVamana (recall 1.0 ≥ the reference's graph search). An `approx`
+    * leaf over an attached artifact compiles instead as a batch of one
+    * ([[compileApproxMany]]). Plan shape is
     * `TakeOrderedAndProject(limit, filter(scan))`: per-partition partial
     * top-k then a single driver merge, the exact analogue of the
     * reference's per-shard search + cluster merge — no full sort, no wide
@@ -169,12 +171,10 @@ object QueryCompiler {
       col0: Collection, prop: String, metric: IndexKind.Metric,
       vector: Seq[Float], limit: Int, filter: Option[Query],
       weight: Option[Float], approx: Boolean = false, budget: Int = 0): Compiled = {
-    if (approx) col0.vectorIndexes.get(prop) match {
-      case Some(idx) =>
-        return approxNear(col0, prop, metric, vector, limit, filter, weight, idx, budget)
-      case None => () // no artifact attached — serve exact (strictly better)
-    }
     val w = weight.getOrElse(1.0f)
+    if (approx && col0.vectorIndexes.contains(prop))
+      return compileApproxMany(col0, prop, metric, Seq((vector, limit, w)), budget, filter).head
+    // approx without an attached artifact is served exact (strictly better)
     val base = filter.map(f => applySet(col0, compile(col0, f).set)).getOrElse(col0.df)
     val d = Distances.distanceToQuery(metric, column(prop), vector).cast(FloatType)
     // Score columns are projected BELOW the sort+limit (cheap per-row
@@ -200,96 +200,17 @@ object QueryCompiler {
     Compiled(Ids(ranked.select(IdCol)), Some(ranked), setFromRanked = true)
   }
 
-  /** Two-stage approximate `near` against an attached quantizer artifact
-    * (reference shard/vectorstore/binary.go, product.go: the quantized
-    * store answers the scan, full vectors re-rank):
-    *
-    *   stage 1 — candidate ids by quantized distance over the NARROW
-    *   encoded frame (packed hamming / ADC lookups), partial top-`budget`
-    *   per partition (`TakeOrderedAndProject`, no full sort). A pre-filter
-    *   restricts the candidate scan itself, so filtered-out rows never
-    *   consume candidate budget (filter-first, models/search.go:9–15);
-    *
-    *   stage 2 — the true metric over JUST the candidate rows (broadcast
-    *   semi-join, ≤ `budget` rows): at 100 TB the wide vector column is
-    *   read only for candidates.
-    *
-    * Result schema and scoring match exact `near` bit-for-bit; only the
-    * candidate set is approximate.
-    */
-  private def approxNear(
-      col0: Collection, prop: String, metric: IndexKind.Metric,
-      vector: Seq[Float], limit: Int, filter: Option[Query],
-      weight: Option[Float], idx: VectorIndex, budget: Int): Compiled = {
-    val w = weight.getOrElse(1.0f)
-    idx match {
-      // graph artifact: candidates = the beam pool of a hop-batched walk
-      // (VamanaServe), budget playing the reference's searchSize. A
-      // pre-filter cannot restrict the TRAVERSAL (filtered-out nodes
-      // still route the walk — removing them would disconnect the graph);
-      // instead the reference's OPTIMISTIC filtered search applies
-      // (vamana/search.go:27–51): seed with the first `budget` in-filter
-      // ids, navigate unfiltered, collect in-filter expanded nodes — so a
-      // filter matching ≤ budget points is served EXACTLY, and recall
-      // degrades gracefully (not cliff-like) past that.
-      case vidx: VamanaVectorIndex =>
-        // past the local budget, the walk fetches from a _gid-bucketed
-        // table — every per-hop fetch AND the final candidate-id lookup
-        // below are bucket-pruned point reads, not artifact scans. With
-        // a CodedSource attached (PQ/OPQ ADC codes or the RaBitQ 1-bit
-        // payload) the table carries _codes instead of _vec (the DiskANN
-        // compressed-navigation regime): hops rank by the source's
-        // estimator and only the exact re-rank below reads full vectors.
-        val coded = vidx.codedServing.map(c => (c, vidx.coded.get))
-        val art = coded.map(_._1).getOrElse(vidx.serving)
-        val codedModel = coded.map(_._2)
-        val (entry, maxHops) = (vidx.entry, vidx.maxHops)
-        val gids = filter match {
-          case None => VamanaServe.beamCandidateGids(
-            art, metric, vector, budget, entry, maxHops, vidx.local, codedModel)
-          case Some(f) =>
-            val matchArt = applySet(col0, compile(col0, f).set, art)
-            VamanaServe.beamCandidateGidsFiltered(
-              art, matchArt, metric, vector, budget, entry, maxHops,
-              vidx.local, codedModel)
-        }
-        return vamanaPoolCompiled(metric, vector, limit, w, vidx, gids)
-      case _ => ()
-    }
-    val restricted0 = filter match {
-      case None => idx.encoded
-      case Some(f) => applySet(col0, compile(col0, f).set, idx.encoded)
-    }
-    val (restricted, qd, _) = flatCandidateExpr(idx, metric, vector, restricted0)
-    val scored = restricted.select(col(IdCol), qd.as("_qd"))
-    // a spilled IVF-PQ artifact stores an id in several cells, so two
-    // probed copies may both score: keep the best per id, or duplicates
-    // burn budget slots (BQ/PQ frames are id-unique — skip the aggregate)
-    val deduped = idx match {
-      case _: IvfPqVectorIndex => scored.groupBy(IdCol).agg(min(col("_qd")).as("_qd"))
-      case _ => scored
-    }
-    val candIds = deduped
-      .orderBy(col("_qd").asc, col(IdCol).asc)
-      .limit(budget)
-      .select(IdCol)
-    rerank(col0, prop, metric, vector, limit, w, candIds)
-  }
-
-  /** Stage-1 candidate scan for a FLAT quantizer artifact: the (scan
-    * frame, quantized-distance column, probed-cells) triple for `vector`
-    * under the DECLARED metric — THE single definition of every
-    * per-index candidate ranking, shared by the one-query route and
-    * compileFlatMany (which folds K of these columns into ONE scan).
-    * IVF families also restrict the frame to their probed cells
-    * (per-query partition pruning) and report those cells in the third
-    * slot (None for full-scan families) so the batched route can scan
-    * the UNION of a group's cells while guarding each query's column to
-    * its OWN cells.
+  /** Stage-1 candidate ranking for a FLAT quantizer artifact: the
+    * (quantized-distance column, probed cells) pair for `vector` under
+    * the DECLARED metric — THE single definition of every per-index
+    * candidate ranking; [[compileFlatMany]] folds K of these columns into
+    * ONE scan. IVF families report their probed cells (None for full-scan
+    * families), so the scan reads the UNION of a group's cells while each
+    * query's column is guarded to its OWN cells.
     */
   private def flatCandidateExpr(
-      idx: VectorIndex, metric: IndexKind.Metric, vector: Seq[Float],
-      restricted0: DataFrame): (DataFrame, Column, Option[Seq[Int]]) = idx match {
+      idx: VectorIndex, metric: IndexKind.Metric,
+      vector: Seq[Float]): (Column, Option[Seq[Int]]) = idx match {
       case BinaryVectorIndex(th, _, levels) =>
         require(vector.length == th.length,
           s"query vector has ${vector.length} dims; binary index has ${th.length}")
@@ -311,7 +232,7 @@ object QueryCompiler {
           case _ =>
             graft.functions.PackedOps.packedHamming(col("_packed"), qWords)
         }
-        (restricted0, cd, None)
+        (cd, None)
       case ProductVectorIndex(model, _) =>
         require(vector.length == model.dim,
           s"query vector has ${vector.length} dims; product index has ${model.dim}")
@@ -325,7 +246,7 @@ object QueryCompiler {
           if (metric == IndexKind.Metric.Dot)
             graft.operators.ProductQuantizer.adcDotDistance(col("_codes"), vector, model)
           else graft.operators.ProductQuantizer.adcDistance(col("_codes"), vector, model)
-        (restricted0, pqCd, None)
+        (pqCd, None)
       case OpqVectorIndex(model, _) =>
         require(vector.length == model.dim,
           s"query vector has ${vector.length} dims; OPQ index has ${model.dim}")
@@ -338,7 +259,7 @@ object QueryCompiler {
           if (metric == IndexKind.Metric.Dot)
             graft.operators.ProductQuantizer.adcDotDistance(col("_codes"), rq, model.pq)
           else graft.operators.ProductQuantizer.adcDistance(col("_codes"), rq, model.pq)
-        (restricted0, opqCd, None)
+        (opqCd, None)
       case RbqVectorIndex(model, _) =>
         require(vector.length == model.dim,
           s"query vector has ${vector.length} dims; RaBitQ index has ${model.dim}")
@@ -353,7 +274,7 @@ object QueryCompiler {
               col("_bits"), col("_norm"), col("_dotq"), col("_dotc"), vector, model)
           else graft.operators.RaBitQ.estimateExpr(
             col("_bits"), col("_norm"), col("_dotq"), vector, model)
-        (restricted0, rbqCd, None)
+        (rbqCd, None)
       case ScalarVectorIndex(lo, hi, _) =>
         require(vector.length == lo.length,
           s"query vector has ${vector.length} dims; scalar index has ${lo.length}")
@@ -363,7 +284,7 @@ object QueryCompiler {
           if (metric == IndexKind.Metric.Dot)
             graft.operators.ScalarQuantizer.approxDotDistance(col("_codes"), vector, lo, hi)
           else graft.operators.ScalarQuantizer.approxDistance(col("_codes"), vector, lo, hi)
-        (restricted0, sqCd, None)
+        (sqCd, None)
       case IvfRbqVectorIndex(coarse, rotation, nprobe, _) =>
         require(vector.length == coarse.dim,
           s"query vector has ${vector.length} dims; IVF-RaBitQ index has ${coarse.dim}")
@@ -391,14 +312,13 @@ object QueryCompiler {
           when(col("_bucket") === arms.head._1, arms.head._2)) {
           case (acc, (b, e)) => acc.when(col("_bucket") === b, e)
         }
-        (restricted0.filter(col("_bucket").isin(rbqCells: _*)), chain,
-          Some(rbqCells))
+        (chain, Some(rbqCells))
       case IvfPqVectorIndex(coarse, model, nprobe, _) =>
         require(vector.length == coarse.dim,
           s"query vector has ${vector.length} dims; IVF-PQ index has ${coarse.dim}")
-        // probe restriction FIRST: the artifact frame is bucket-partitioned,
-        // so this lands in PartitionFilters and unprobed cells are never
-        // read. Dot queries probe AND score by inner product (round 7):
+        // the artifact frame is bucket-partitioned, so the scan's probe
+        // restriction lands in PartitionFilters and unprobed cells are
+        // never read. Dot queries probe AND score by inner product (round 7):
         // high-dot cells, −dot(q,c)−dot(q,r̂) tables — L2 probing would
         // skip the very cells an unnormalized MIPS query needs.
         val dot = metric == IndexKind.Metric.Dot
@@ -409,11 +329,10 @@ object QueryCompiler {
         val tables =
           if (dot) graft.operators.IvfPq.queryTablesDot(coarse, model, vector, cells)
           else graft.operators.IvfPq.queryTables(coarse, model, vector, cells)
-        (restricted0.filter(col("_bucket").isin(cells: _*)),
-          graft.operators.IvfPq.adcUdf(tables)(col("_bucket"), col("_codes")),
+        (graft.operators.IvfPq.adcUdf(tables)(col("_bucket"), col("_codes")),
           Some(cells))
       case _: VamanaVectorIndex =>
-        throw new IllegalStateException("vamana artifacts are served above")
+        throw new IllegalStateException("vamana artifacts are served by compileVamanaMany")
   }
 
   /** Pool gids → (id, full-precision vector), the input of the graph
@@ -485,24 +404,27 @@ object QueryCompiler {
     Compiled(Ids(ranked.select(IdCol)), Some(ranked), setFromRanked = true)
   }
 
-  /** The tail of the graph-served route: beam pool (graph ids) →
-    * (id, vector) candidates → candidate-bounded exact re-rank. */
-  private def vamanaPoolCompiled(
-      metric: IndexKind.Metric, vector: Seq[Float], limit: Int, w: Float,
-      vidx: VamanaVectorIndex, gids: Seq[Long]): Compiled = {
-    val byGid = vamanaCandidates(vidx, gids)
-    vamanaRerank(metric, vector, limit, w,
-      gids.flatMap(byGid.get), vidx.encoded.sparkSession)
+  /** Compile K approx vector leaves of one group against `prop`'s attached
+    * artifact: the graph walk for a Vamana graph, the fused quantized
+    * candidate scan for any other artifact. `items` = (vector, limit,
+    * weight) per leaf.
+    */
+  private[engine] def compileApproxMany(
+      col0: Collection, prop: String, metric: IndexKind.Metric,
+      items: Seq[(Seq[Float], Int, Float)], budget: Int,
+      filter: Option[Query]): Seq[Compiled] = col0.vectorIndexes(prop) match {
+    case _: VamanaVectorIndex => compileVamanaMany(col0, prop, metric, items, budget, filter)
+    case _ => compileFlatMany(col0, prop, metric, items, budget, filter)
   }
 
-  /** Batched compile for MANY single-leaf, unfiltered, approx vectorVamana
-    * queries against ONE attached graph artifact (Search.searchMany's
-    * batchable group): the walks advance as a single wave — per hop round
-    * every member's frontier fuses into one bucket-pruned fetch
-    * (VamanaServe.beamCandidateGidsBatch), and the final gid→id lookup is
-    * ONE fused point read over the union of the pools. Each query's pool,
-    * and therefore its compiled result, is identical to its independent
-    * single-query compile (VamanaServeSpec pool-equality law).
+  /** Compile K approx vectorVamana leaves against ONE attached graph
+    * artifact; a single leaf is a batch of one (Search.searchMany groups
+    * leaves per prop, budget, metric and filter). The walks advance as a
+    * single wave — per hop round every member's frontier fuses into one
+    * bucket-pruned fetch (VamanaServe.beamCandidateGidsBatch) — and the
+    * final gid→id lookup is ONE fused point read over the union of the
+    * pools. Each query's pool is identical to its walk in a batch of one
+    * (VamanaServeSpec pool-equality law).
     *
     * `items` = (vector, limit, weight) per request; `budget` is the shared
     * beam width (requests with different budgets land in different groups).
@@ -515,11 +437,14 @@ object QueryCompiler {
     * VamanaServe.beamCandidateGidsFilteredBatch), and only per-query
     * frontiers differ.
     */
-  private[engine] def compileVamanaMany(
+  private def compileVamanaMany(
       col0: Collection, prop: String, metric: IndexKind.Metric,
       items: Seq[(Seq[Float], Int, Float)], budget: Int,
-      filter: Option[Query] = None): Seq[Compiled] = {
+      filter: Option[Query]): Seq[Compiled] = {
     val vidx = col0.vectorIndexes(prop).asInstanceOf[VamanaVectorIndex]
+    // with a CodedSource attached (PQ/OPQ ADC codes or the RaBitQ 1-bit
+    // payload) the walk fetches _codes instead of _vec — the DiskANN
+    // compressed-navigation regime; only the re-rank reads full vectors
     val coded = vidx.codedServing.map(c => (c, vidx.coded.get))
     val art = coded.map(_._1).getOrElse(vidx.serving)
     val pools = filter match {
@@ -544,19 +469,18 @@ object QueryCompiler {
     }
   }
 
-  /** Batched compile for MANY single-leaf, unfiltered, approx vectorFlat
-    * queries against ONE attached quantizer artifact (Search.searchMany's
-    * flat batchable group — the full-scan families BQ / PQ / OPQ / SQ8 /
-    * RaBitQ AND the IVF families IVF-PQ / IVF-RaBitQ): the K
+  /** Compile K approx vectorFlat leaves against ONE attached quantizer
+    * artifact — the full-scan families BQ / PQ / OPQ / SQ8 / RaBitQ and
+    * the IVF families IVF-PQ / IVF-RaBitQ; a single leaf is a batch of
+    * one (reference shard/vectorstore/binary.go, product.go: the
+    * quantized store answers the scan, full vectors re-rank). The K
     * quantized-distance columns evaluate in ONE codegen'd pass over the
     * encoded frame — the scan I/O, the dominant flat candidate-stage cost
-    * at 100 TB, is paid once for the whole group — then ONE global
-    * bounded aggregate (Similarity.TopKStrMultiAgg: K top-budget buffers
-    * per partition partial, ≤ Σ 2·budget entries each, no grouping
-    * shuffle at all) replays each query's `orderBy(_qd asc, _id asc)
-    * .limit(budget)` exactly, and ONE collect feeds the per-request
-    * exact re-ranks. The input row stays ONE row wide regardless of K —
-    * the earlier posexplode formulation (kept as the law oracle in
+    * at 100 TB, is paid once for the whole group — and ONE [[multiTopK]]
+    * stage replays each query's `orderBy(_qd asc, _id asc).limit(budget)`
+    * exactly. Each query's collected candidate ids then feed its exact
+    * [[rerank]]. The input row stays ONE row wide regardless of K — the
+    * earlier posexplode formulation (kept as the law oracle in
     * SearchManySpec) paid K× row inflation at the map boundary.
     *
     * IVF families keep their partition pruning under batching (round-12
@@ -570,61 +494,32 @@ object QueryCompiler {
     * distance per query (map-side-combined hash aggregate; NaN compares
     * GREATER than every real distance in Spark's nan-safe ordering, so
     * an id probed by query i in any cell keeps its best real estimate) —
-    * exactly the single-request route's duplicate guard.
+    * otherwise duplicate candidates would burn budget slots.
     *
     * Null defense (round-12 advice): a null quantized distance is
-    * coalesced to NaN — excluded for that query — where the
-    * single-request route would sort it FIRST (asc nulls-first). Both
-    * are unreachable (encode paths drop null/short vectors); the batch
-    * choice degrades softly per query instead of crashing the whole
-    * batch in the array encoder.
+    * coalesced to NaN — excluded for that query — where Spark's
+    * `orderBy(_qd asc)` would sort it FIRST (nulls first). Both are
+    * unreachable (encode paths drop null/short vectors); the exclusion
+    * degrades softly per query instead of crashing the whole batch in
+    * the array encoder.
     */
-  /** ONE multi-top-k pass — the shared tail of every fused multi-query
-    * scan (compileFlatMany / compileTextMany): select (id, K-wide key
-    * array), aggregate GLOBALLY with TopKStrMultiAgg (bounded partials,
-    * no grouping shuffle), collect the single finished buffer, slice it
-    * back into per-query (key, id) lists.
-    */
-  private def multiTopK(
-      frame: DataFrame, keys: Seq[Column],
-      ks: Array[Int]): Seq[Seq[(Double, String)]] = {
-    val topAgg = udaf(new graft.operators.Similarity.TopKStrMultiAgg(ks))
-    val st = frame
-      .select(col(IdCol), array(keys: _*).as("_qds"))
-      .agg(topAgg(col("_qds"), col(IdCol)).as("_top"))
-      .head().getStruct(0)
-    graft.operators.Similarity.TopKStrMultiAgg.slices(
-      ks, st.getSeq[Double](0), st.getSeq[String](1), st.getSeq[Int](2))
-  }
-
-  private[engine] def compileFlatMany(
+  private def compileFlatMany(
       col0: Collection, prop: String, metric: IndexKind.Metric,
       items: Seq[(Seq[Float], Int, Float)], budget: Int,
-      filter: Option[Query] = None): Seq[Compiled] = {
+      filter: Option[Query]): Seq[Compiled] = {
     val idx = col0.vectorIndexes(prop)
-    // a shared pre-filter (Search.searchMany groups flat requests by
+    // the group's pre-filter (Search.searchMany groups flat requests by
     // filter AST, so every member's filter is EQUAL) restricts the fused
-    // candidate scan itself, exactly like the single route's approxNear —
-    // filtered-out rows never consume candidate budget
+    // candidate scan itself — filtered-out rows never consume candidate
+    // budget (filter-first, reference models/search.go:9–15)
     val frame = filter match {
       case None => idx.encoded
       case Some(f) => applySet(col0, compile(col0, f).set, idx.encoded)
     }
-    val cands = items.map { case (vec, _, _) =>
-      flatCandidateExpr(idx, metric, vec, frame)
-    }
-    val isIvf = cands.head._3.isDefined
-    val scan =
-      if (!isIvf) {
-        // full-scan families return the frame untouched; anything that
-        // restricts its scan per query must carry cells or stay single
-        cands.foreach { case (restricted, _, _) =>
-          require(restricted eq frame,
-            s"${idx.getClass.getSimpleName} restricts its candidate scan per query — not flat-batchable")
-        }
-        frame
-      } else frame.filter(col("_bucket").isin(cands.flatMap(_._3.get).distinct: _*))
-    val qds = cands.map { case (_, qd, cellsOpt) =>
+    val cands = items.map { case (vec, _, _) => flatCandidateExpr(idx, metric, vec) }
+    val probed = cands.flatMap(_._2).flatten.distinct
+    val scan = if (probed.isEmpty) frame else frame.filter(col("_bucket").isin(probed: _*))
+    val qds = cands.map { case (qd, cellsOpt) =>
       val guarded = cellsOpt match {
         case Some(cells) => when(col("_bucket").isin(cells: _*), qd)
         case None => qd
@@ -644,30 +539,49 @@ object QueryCompiler {
     val tops = multiTopK(aggFrame, keyCols,
       Array.fill(items.length)(budget))
     items.zip(tops).map { case ((vec, limit, w), pairs) =>
-      val ids = pairs.map(_._2)
-      val candIds =
-        if (ids.isEmpty) frame.filter(lit(false)).select(IdCol)
-        else {
-          import frame.sparkSession.implicits._
-          ids.toDF(IdCol)
-        }
-      rerank(col0, prop, metric, vec, limit, w, candIds)
+      rerank(col0, prop, metric, vec, limit, w, pairs.map(_._2))
     }
   }
 
-  /** Stage 2 of every approximate path: the TRUE metric over JUST the
-    * candidate rows (broadcast semi-join, ≤ budget rows) — at 100 TB the
-    * wide vector column is read only for candidates. Result schema and
-    * scoring match exact `near` bit-for-bit.
+  /** ONE multi-top-k pass — the shared tail of every fused multi-query
+    * scan (compileFlatMany / compileTextMany), run as ONE Spark stage with
+    * no exchange of its own: each partition folds its (K-wide key array,
+    * id) rows into a TopKStrMultiAgg buffer with the aggregator's own
+    * `reduce` (≤ Σ 2·ks(qi) entries), the buffers come back through a
+    * Dataset action — so the plan stays visible to query-execution
+    * listeners and to DumpPlans — and the driver merges them with `merge`
+    * and `finish`. A global aggregate would add a SinglePartition shuffle
+    * stage, and with it a job. Returns per-query (key, id) lists in
+    * (key asc, id asc) order.
+    */
+  private def multiTopK(
+      frame: DataFrame, keys: Seq[Column],
+      ks: Array[Int]): Seq[Seq[(Double, String)]] = {
+    val agg = new graft.operators.Similarity.TopKStrMultiAgg(ks)
+    val partials = frame
+      .select(array(keys: _*).as("_qds"), col(IdCol))
+      .mapPartitions(rows => Iterator(rows.foldLeft(agg.zero)((b, r) =>
+        agg.reduce(b, (r.getSeq[Double](0), r.getString(1))))))(agg.bufferEncoder)
+      .collect()
+    val top = agg.finish(partials.foldLeft(agg.zero)(agg.merge))
+    graft.operators.Similarity.TopKStrMultiAgg.slices(
+      ks, top.ds.toSeq, top.ids.toSeq, top.ns.toSeq)
+  }
+
+  /** Stage 2 of the flat approximate path: the TRUE metric over JUST the
+    * collected candidate ids (≤ budget `_id` literals, an IN filter the
+    * collection scan can push down) — at 100 TB the wide vector column is
+    * read only for candidates. Result schema and scoring match exact
+    * `near` bit-for-bit; only the candidate set is approximate.
     */
   private def rerank(
       col0: Collection, prop: String, metric: IndexKind.Metric,
-      vector: Seq[Float], limit: Int, w: Float, candIds: DataFrame): Compiled = {
+      vector: Seq[Float], limit: Int, w: Float, candIds: Seq[String]): Compiled = {
     val d = Distances.distanceToQuery(metric, column(prop), vector).cast(FloatType)
     // same Limit(Sort(Project)) shape as exact `near` (see the comment
     // there): scores below the sort+limit keep the top-k fusable
     val ranked = col0.df
-      .join(broadcast(candIds), Seq(IdCol), "left_semi")
+      .filter(col(IdCol).isin(candIds: _*))
       .filter(column(prop).isNotNull)
       .select(col(IdCol), d.as(DistanceCol))
       .select(col(IdCol), col(DistanceCol),
@@ -700,78 +614,37 @@ object QueryCompiler {
       .withColumn("_df", element_at(df, col("_term")))
   }
 
-  /** tf-idf scored text search (reference text.go:305–396):
+  /** tf-idf scored text search (reference text.go:305–396) for K text
+    * leaves against ONE property; a single leaf is a batch of one:
     * score(doc) = Σ_t∈queryTerms (freq_t/docLen) * log10(numDocs/(df_t+1)),
     * over the containsAll/containsAny matched set, optionally intersected
-    * with a pre-filter, sorted desc and truncated to `limit`. df/idf are
-    * the index's, over ALL docs with the property — the pre-filter narrows
-    * the candidate set, not the statistics (text.go:328–334 intersects
-    * after the posting-set merge).
-    */
-  private def textSearch(col0: Collection, prop: String, o: TextOpts): Compiled = {
-    val terms = TextAnalyzer.analyzeString(o.value).distinct
-    if (terms.isEmpty)
-      throw new IllegalArgumentException("text query value has no terms after analysis")
-    val index = textIndex(col0, prop)
-    val numDocs = index.numDocs // numDocs of the text index (text.go:371)
-
-    // matched docs: per-doc count of distinct matched query terms
-    val perDoc = termPostings(index, terms)
-      .groupBy(IdCol)
-      .agg(
-        count(lit(1)).as("_nterms"),
-        // Σ (freq/docLen) * log10(numDocs/(df+1)); doclen constant per doc
-        sum((col("_freq").cast("double") / col("_doclen").cast("double")) *
-          log10(lit(numDocs.toDouble) / (col("_df").cast("double") + 1.0))).as("_rawscore"))
-    val matched = o.operator match {
-      case Op.ContainsAll => perDoc.filter(col("_nterms") === terms.length)
-      case Op.ContainsAny => perDoc
-      case other => throw new IllegalArgumentException(s"invalid text operator $other")
-    }
-    // pre-filter intersect (after set merge, before scoring truncation)
-    val filtered = o.filter match {
-      case None => matched
-      case Some(f) => applySet(col0, compile(col0, f).set, matched)
-    }
-    val w = o.weight.getOrElse(1.0f)
-    val ranked = filtered
-      .select(
-        col(IdCol),
-        lit(null).cast(FloatType).as(DistanceCol),
-        col("_rawscore").cast(FloatType).as(ScoreCol))
-      .withColumn(HybridScoreCol, (col(ScoreCol) * lit(w)).cast(FloatType))
-      .orderBy(col(ScoreCol).desc, col(IdCol).asc)
-      .limit(o.limit)
-    Compiled(Ids(ranked.select(IdCol)), Some(ranked), setFromRanked = true)
-  }
-
-  /** Batched compile for MANY single-leaf text queries against ONE
-    * property (Search.searchMany's text batchable group —
-    * round-12 verdict item #3; hybrid serving workloads are text+vector,
-    * and before this only the vector half amortized): each text leaf
-    * alone pays a postings scan + a per-doc grouped score — the dominant
-    * text serving cost at corpus scale. A batch shares both: ONE postings
-    * restriction to the UNION of the group's query terms (each row's df
-    * looked up in the index's `docFreq`, as the single route does), ONE
-    * groupBy(doc) with K conditional (score, matched-term-count) column
-    * pairs, and ONE bounded per-query top-k (TopKStrMultiAgg, per-query
-    * k = limit) whose ranking key replays `orderBy(score32 desc, id
-    * asc)` exactly: the NEGATED float32 score widened to double (exact),
-    * ascending,
-    * with `+ 0.0` collapsing a −0.0 score onto +0.0 (Spark's comparator
-    * treats them equal; `Double.compare` would not). Ineligible docs
-    * (containsAll misses) rank as NaN = excluded.
+    * with the group's pre-filter, ranked by score desc, id asc and
+    * truncated to the leaf's `limit`. df/idf are the index's, over ALL
+    * docs with the property — the pre-filter narrows the candidate set,
+    * not the statistics (text.go:328–334 intersects after the posting-set
+    * merge).
     *
-    * The collected (score, id) pairs rebuild each request's ranked frame
-    * bit-identically: score32 round-trips the negation exactly, and the
-    * hybrid column applies the same float-multiply expression as the
-    * single route. Per-term double-sum ORDER inside the shared groupBy
-    * can differ from the single route's ulp-wise; the float32 cast
-    * absorbs it everywhere observable (the gates additionally round).
+    * The group shares ONE postings restriction to the UNION of its query
+    * terms (each row's df looked up in the index's `docFreq`), ONE
+    * groupBy(doc) with K conditional (score, matched-term-count) column
+    * pairs, and ONE bounded per-query top-k ([[multiTopK]], per-query
+    * k = limit) whose ranking key replays `orderBy(score32 desc, id asc)`
+    * exactly: the NEGATED float32 score widened to double (exact),
+    * ascending, with `+ 0.0` collapsing a −0.0 score onto +0.0 (Spark's
+    * comparator treats them equal; `Double.compare` would not).
+    * Ineligible docs (containsAll misses) rank as NaN = excluded.
+    *
+    * The collected (score, id) pairs rebuild each leaf's ranked frame as
+    * a driver-local relation: score32 round-trips the negation exactly,
+    * and the hybrid column is the float multiply score32 · weight. The
+    * order of a doc's per-term double sum inside the shared groupBy is
+    * Spark's to pick and may change with the group's other members
+    * ulp-wise; the float32 cast absorbs that everywhere observable (the
+    * gates round, and SearchManySpec compares at 4 decimals).
     */
   private[engine] def compileTextMany(
       col0: Collection, prop: String, optsList: Seq[TextOpts],
-      filter: Option[Query] = None): Seq[Compiled] = {
+      filter: Option[Query]): Seq[Compiled] = {
     val termsPer = optsList.map { o =>
       val ts = TextAnalyzer.analyzeString(o.value).distinct
       if (ts.isEmpty)
@@ -779,7 +652,7 @@ object QueryCompiler {
       ts
     }
     val index = textIndex(col0, prop)
-    val numDocs = index.numDocs
+    val numDocs = index.numDocs // numDocs of the text index (text.go:371)
     val joined = termPostings(index, termsPer.flatten.distinct)
     val contrib = (col("_freq").cast("double") / col("_doclen").cast("double")) *
       log10(lit(numDocs.toDouble) / (col("_df").cast("double") + 1.0))
@@ -789,8 +662,8 @@ object QueryCompiler {
     }
     val fused0 = joined.groupBy(IdCol).agg(aggCols.head, aggCols.tail: _*)
     // shared pre-filter (EQUAL across the group by construction): intersect
-    // AFTER the posting-set merge, BEFORE scoring truncation — the single
-    // route's placement (text.go:328–334); df/idf statistics stay unfiltered
+    // AFTER the posting-set merge, BEFORE scoring truncation — the
+    // reference's placement (text.go:328–334); df/idf stay unfiltered
     val fused = filter match {
       case None => fused0
       case Some(f) => applySet(col0, compile(col0, f).set, fused0)
@@ -806,14 +679,20 @@ object QueryCompiler {
         lit(Double.NaN))
     }
     val tops = multiTopK(fused, keys, optsList.map(_.limit).toArray)
+    import org.apache.spark.sql.types.{StructType, StructField, StringType}
+    val scoredSchema = StructType(Seq(
+      StructField(IdCol, StringType), StructField(ScoreCol, FloatType, nullable = false)))
     optsList.zip(tops).map { case (o, pairs) =>
       val w = o.weight.getOrElse(1.0f)
-      import col0.df.sparkSession.implicits._
-      // + 0.0f: a zero score round-trips the negated key as −0.0f, but
-      // the single route's double-sum can only produce +0.0 (IEEE x−x),
-      // so normalize the sign back
-      val scored = pairs.map { case (k, id) => (id, (-k).toFloat + 0.0f) }
-      val ranked = scored.toDF(IdCol, ScoreCol)
+      // + 0.0f: a zero score comes back from the negated key as −0.0f,
+      // while the tf-idf double sum can only produce +0.0 (a zero idf
+      // times a positive tf is +0.0, and x − x is +0.0 under
+      // round-to-nearest), so normalize the sign back
+      val scored = pairs.map { case (k, id) =>
+        org.apache.spark.sql.Row(id, (-k).toFloat + 0.0f)
+      }
+      val ranked = col0.df.sparkSession
+        .createDataFrame(java.util.Arrays.asList(scored: _*), scoredSchema)
         .select(
           col(IdCol),
           lit(null).cast(FloatType).as(DistanceCol),

@@ -15,10 +15,14 @@ import QueryCompiler._
   */
 object Search {
 
-  def search(col0: Collection, req: SearchRequest): DataFrame = {
-    validate(col0, req)
-    assemble(col0, req, QueryCompiler.compile(col0, req.query))
-  }
+  /** Serve one request: a batch of one ([[searchMany]]). Ranked text and
+    * approx vector leaves collect their top-k when compiled (the graph
+    * walk, the fused text and quantized candidate stages each run as
+    * Spark jobs here); predicates, exact `near` and the assembly stay
+    * lazy in the returned frame.
+    */
+  def search(col0: Collection, req: SearchRequest): DataFrame =
+    searchMany(col0, Seq(req)).head
 
   private def validate(col0: Collection, req: SearchRequest): Unit = {
     Validation.validate(req).left.foreach(m => throw new IllegalArgumentException(m))
@@ -27,99 +31,62 @@ object Search {
   }
 
   /** Serve MANY requests in one call, returning one result frame per
-    * request in request order. Semantics are K independent [[search]]
-    * calls — bit-identical for the vector families; for text, identical
-    * up to float32 rounding of the per-term double sum, whose order
-    * inside the fused groupBy can differ from the single route's (neither
-    * route promises a summation order; the SearchManySpec laws assert
-    * 4-decimal equality, the same strength the gates claim). The win is
-    * the serving cost of the graph-walk
-    * family: requests that are single-leaf approx vectorVamana `near`
-    * queries against the SAME attached graph artifact (grouped further
-    * by rescore budget — the beam width — and by filter AST: unfiltered
-    * requests together, filtered ones batching when their filters are
-    * EQUAL, sharing the filter's seed set and membership verdicts) walk
-    * as ONE hop-batched wave — per hop round every group member's
-    * frontier fuses into a single bucket-pruned fetch
-    * (VamanaServe.beamCandidateGidsBatch), and the final gid→id lookup is
-    * one fused point read for the whole group — so a K-query batch costs
-    * ~maxHops Spark jobs instead of K×maxHops (the per-query
-    * job-scheduling floor is the dominant serving cost at small K).
-    * Single-leaf, unfiltered, approx vectorFlat requests against a
-    * quantizer artifact (full-scan BQ/PQ/OPQ/SQ8/RaBitQ, or IVF-PQ /
-    * IVF-RaBitQ) likewise fuse: the group's K quantized-distance columns
-    * evaluate in ONE pass over the encoded frame (compileFlatMany),
-    * amortizing the candidate scan — the dominant flat serving cost at
-    * corpus scale — across the batch; IVF members scan the UNION of the
-    * group's probed cells with each query's column guarded to its OWN
-    * cells, so per-query partition pruning survives batching. Single-leaf,
-    * unfiltered TEXT requests against one property share the postings
-    * restriction and one fused per-doc scoring aggregate
-    * (compileTextMany). Batchable leaves are harvested from ANYWHERE in a
-    * request's query tree (round 12): a hybrid `_and`/`_or` of text +
-    * vector leaves decomposes into the same fused families — the leaves
-    * batch across requests, then each request's combinator merge runs on
-    * the precompiled leaf results, so hybrid serving workloads amortize
-    * end-to-end instead of falling back whole. Identical leaves shared by
-    * several requests compile ONCE (the precompiled map is keyed by leaf
-    * value). FILTERED leaves batch in every family when their filter ASTs
-    * are EQUAL (the filter joins each family's group key): the vamana
-    * group shares the filter's seed set and membership verdicts, the flat
-    * group's fused scan is filter-restricted once, and the text group
-    * intersects its fused per-doc frame once (after set merge, before
-    * truncation — the single route's placement). Only plain predicates and
-    * combinators contribute no fused work of their own.
+    * request in request order; [[search]] is the batch of one. Every
+    * batchable leaf — anywhere in a request's `_and`/`_or` tree —
+    * compiles through its family's batch route, grouped across the whole
+    * batch; identical leaves shared by several requests compile ONCE (the
+    * precompiled map is keyed by leaf value), and each request's
+    * combinator merge then runs on the precompiled leaf results. A
+    * request's answer does not depend on its batch: the vector families
+    * are bit-identical to a batch of one; a text score is identical up to
+    * float32 rounding of its per-term double sum, whose order inside the
+    * fused groupBy can change with the group's other members (the
+    * SearchManySpec laws assert 4-decimal equality, the same strength the
+    * gates claim).
+    *
+    * The three families, each grouped further by filter AST (requests
+    * batch when their filters are EQUAL):
+    *   - approx vector leaves over an attached Vamana graph, per
+    *     (prop, metric, budget — the beam width): ONE hop-batched walk
+    *     wave — per hop round every member's frontier fuses into a single
+    *     bucket-pruned fetch — and one fused gid→id point read
+    *     (compileVamanaMany), so K queries cost ~maxHops Spark jobs instead
+    *     of K×maxHops. Filtered groups share the filter's seed set and
+    *     membership verdicts;
+    *   - approx vector leaves over a quantizer artifact (full-scan
+    *     BQ/PQ/OPQ/SQ8/RaBitQ, or IVF-PQ / IVF-RaBitQ), per (prop, metric,
+    *     budget): the K quantized-distance columns evaluate in ONE
+    *     one-stage pass over the (filter-restricted) encoded frame
+    *     (compileFlatMany); IVF members scan the UNION of the group's
+    *     probed cells with each query's column guarded to its OWN cells;
+    *   - text leaves per property: one postings restriction and one fused
+    *     per-doc scoring aggregate, intersected once with the shared filter
+    *     (compileTextMany).
+    * Plain predicates, exact `near` and combinators contribute no fused
+    * work of their own.
     */
   def searchMany(col0: Collection, reqs: Seq[SearchRequest]): Seq[DataFrame] = {
     reqs.foreach(validate(col0, _))
-    // batchable = the exact single-leaf shapes whose compile is a pure
-    // function of (prop, vector, budget, limit, weight) over one artifact.
-    // Two families fuse: graph-walk requests share hop waves
-    // (compileVamanaMany); flat requests — full-scan AND IVF — share ONE
-    // multi-query candidate scan (compileFlatMany; IVF members keep
-    // per-query cell pruning via the union-scan + own-cells guard).
-    // filtered approx requests ARE batchable (round-12 item #8): the
-    // optimistic filtered walk's seeds and membership verdicts are pure
-    // functions of the filter, so requests with EQUAL filter ASTs share
-    // them — the filter joins the group key below
-    def vamanaTag(q: Query): Option[(String, VectorVamanaOpts, IndexKind.Metric)] =
-      q.vectorVamana match {
-        case Some(o) if o.approx && q.and.isEmpty && q.or.isEmpty =>
-          col0.schema.get(q.property) match {
-            case Some(k: IndexKind.VectorVamana)
-                if col0.vectorIndexes.get(q.property)
-                  .exists(_.isInstanceOf[VamanaVectorIndex]) =>
-              Some((q.property, o, k.metric))
-            case _ => None
-          }
+    // an approx vector leaf over an attached artifact: its group key
+    // (prop, metric, rescore budget — QueryCompiler.vamanaBudget /
+    // flatBudget, the ones a leaf compiled alone uses —, filter) and its
+    // (vector, limit, weight) item
+    def approxTag(q: Query): Option[((String, IndexKind.Metric, Int, Option[Query]),
+        (Seq[Float], Int, Float))] =
+      if (!col0.vectorIndexes.contains(q.property)) None
+      else (col0.schema.get(q.property), q.vectorFlat, q.vectorVamana) match {
+        case (Some(k: IndexKind.VectorFlat), Some(o), _) if o.approx =>
+          Some(((q.property, k.metric, QueryCompiler.flatBudget(o), o.filter),
+            (o.vector, o.limit, o.weight.getOrElse(1.0f))))
+        case (Some(k: IndexKind.VectorVamana), _, Some(o)) if o.approx =>
+          Some(((q.property, k.metric, QueryCompiler.vamanaBudget(o), o.filter),
+            (o.vector, o.limit, o.weight.getOrElse(1.0f))))
         case _ => None
       }
-    def flatTag(q: Query): Option[(String, VectorFlatOpts, IndexKind.Metric)] =
-      q.vectorFlat match {
-        case Some(o) if o.approx && q.and.isEmpty && q.or.isEmpty =>
-          col0.schema.get(q.property) match {
-            case Some(k: IndexKind.VectorFlat) =>
-              col0.vectorIndexes.get(q.property) match {
-                case Some(_: BinaryVectorIndex | _: ProductVectorIndex |
-                          _: OpqVectorIndex | _: RbqVectorIndex |
-                          _: ScalarVectorIndex |
-                          _: IvfPqVectorIndex | _: IvfRbqVectorIndex) =>
-                  Some((q.property, o, k.metric))
-                case _ => None // vamana artifact / no artifact: single pipeline
-              }
-            case _ => None
-          }
-        case _ => None
-      }
-    // single-leaf, unfiltered text queries share postings work per
-    // property (compileTextMany) — hybrid serving workloads are
-    // text+vector, so the text half must amortize too
-    def textTag(q: Query): Option[String] = q.text match {
-      case Some(_) if q.and.isEmpty && q.or.isEmpty =>
-        col0.schema.get(q.property) match {
-          case Some(_: IndexKind.Text) => Some(q.property)
-          case _ => None
-        }
+    // a text leaf: its group key (prop, filter)
+    def textTag(q: Query): Option[(String, Option[Query])] = q.text match {
+      case Some(o) if col0.schema.get(q.property).exists(_.isInstanceOf[IndexKind.Text]) =>
+        Some((q.property, o.filter))
       case _ => None
     }
     // harvest batchable leaves from the whole tree (a top-level leaf is
@@ -128,67 +95,22 @@ object Search {
     def leaves(q: Query): Seq[Query] = q.property match {
       case "_and" => q.and.flatMap(leaves)
       case "_or" => q.or.flatMap(leaves)
-      case _ =>
-        if (vamanaTag(q).isDefined || flatTag(q).isDefined ||
-          textTag(q).isDefined) Seq(q)
-        else Nil
+      case _ if approxTag(q).isDefined || textTag(q).isDefined => Seq(q)
+      case _ => Nil
     }
-    val allLeaves = reqs.flatMap(r => leaves(r.query))
-    val distinctLeaves = allLeaves.distinct
-    // how many REQUESTS consume each leaf — not how many distinct leaves a
-    // group holds: a single leaf shared by K requests still wants the
-    // EAGER Many-compile, because each consuming request's merge collects
-    // its ranked children separately, and a lazy shared plan would
-    // re-execute the leaf's scoring K times
-    val consumers = allLeaves.groupBy(identity).map { case (q, qs) => (q, qs.size) }
-    val pre = scala.collection.mutable.Map[Query, QueryCompiler.Compiled]()
-    // a group with ONE distinct leaf consumed by ONE request has nothing
-    // to fuse or share — the Many-compile would only add its eager
-    // materialization step (an extra job at toy scale, measured ~2x on a
-    // K=1 batch) over the single route's lazy plan
-    def fuseOrSingle(members: Seq[Query])(many: => Seq[QueryCompiler.Compiled]): Unit =
-      if (members.size == 1 && consumers(members.head) == 1)
-        pre(members.head) = QueryCompiler.compile(col0, members.head)
-      else members.zip(many).foreach { case (q, c) => pre(q) = c }
-    distinctLeaves.flatMap(q => vamanaTag(q).map((q, _))).groupBy {
-      // the shared budget definitions (QueryCompiler.vamanaBudget /
-      // flatBudget) keep the batch's groups bit-identical to the
-      // single-request route; the filter AST in the key means only
-      // EQUAL-filter requests share a (seeded, membership-probed) wave
-      case (_, (prop, o, metric)) =>
-        (prop, QueryCompiler.vamanaBudget(o), metric, o.filter)
-    }.foreach { case ((prop, budget, metric, filter), members) =>
-      fuseOrSingle(members.map(_._1)) {
-        val items = members.map { case (_, (_, o, _)) =>
-          (o.vector, o.limit, o.weight.getOrElse(1.0f))
-        }
-        QueryCompiler.compileVamanaMany(col0, prop, metric, items, budget, filter)
+    val distinctLeaves = reqs.flatMap(r => leaves(r.query)).distinct
+    val approx = distinctLeaves.flatMap(q => approxTag(q).map((q, _)))
+      .groupBy(_._2._1).toSeq.flatMap { case ((prop, metric, budget, filter), members) =>
+        members.map(_._1).zip(QueryCompiler.compileApproxMany(
+          col0, prop, metric, members.map(_._2._2), budget, filter))
       }
-    }
-    distinctLeaves.filter(vamanaTag(_).isEmpty)
-      .flatMap(q => flatTag(q).map((q, _))).groupBy {
-        // filter AST in the key: EQUAL-filter requests share one
-        // filter-restricted fused scan (round 12)
-        case (_, (prop, o, metric)) =>
-          (prop, QueryCompiler.flatBudget(o), metric, o.filter)
-      }.foreach { case ((prop, budget, metric, filter), members) =>
-        fuseOrSingle(members.map(_._1)) {
-          val items = members.map { case (_, (_, o, _)) =>
-            (o.vector, o.limit, o.weight.getOrElse(1.0f))
-          }
-          QueryCompiler.compileFlatMany(col0, prop, metric, items, budget, filter)
-        }
+    val text = distinctLeaves.flatMap(q => textTag(q).map((q, _)))
+      .groupBy(_._2).toSeq.flatMap { case ((prop, filter), members) =>
+        members.map(_._1).zip(QueryCompiler.compileTextMany(
+          col0, prop, members.map(_._1.text.get), filter))
       }
-    distinctLeaves.filter(q => vamanaTag(q).isEmpty && flatTag(q).isEmpty)
-      .flatMap(q => textTag(q).map((q, _)))
-      .groupBy { case (q, prop) => (prop, q.text.get.filter) }
-      .foreach { case ((prop, filter), members) =>
-        fuseOrSingle(members.map(_._1)) {
-          QueryCompiler.compileTextMany(col0, prop, members.map(_._1.text.get), filter)
-        }
-      }
-    val preMap = pre.toMap
-    reqs.map(r => assemble(col0, r, QueryCompiler.compile(col0, r.query, preMap)))
+    val pre = (approx ++ text).toMap
+    reqs.map(r => assemble(col0, r, QueryCompiler.compile(col0, r.query, pre)))
   }
 
   /** JSON-request face of [[searchMany]]. */
@@ -238,8 +160,8 @@ object Search {
         // (`["_id"]`, or only unknown paths — which project() silently
         // drops) is metadata-only in the same sense. A hybrid whose
         // children all rank takes this branch too (QueryCompiler.merge).
-        // When ranked is a driver-local relation (the graph re-rank, the
-        // fused text batch, a merge) the page below folds to one too
+        // When ranked is a driver-local relation (the graph re-rank, a
+        // text leaf, a merge) the page below folds to one too
         // (LocalFold): zero jobs.
         ranked
       case Some(ranked) if compiled.setFromRanked && col0.pointLookup.isDefined =>

@@ -357,17 +357,23 @@ object VamanaServe {
     def seeds(n: Int): Seq[Long] = inFilter.get.toSeq.sorted.take(n)
   }
 
-  /** The final beam pool (graph ids, ≤ searchSize) for `query`, walked
-    * from `entry`. Empty when the artifact is empty. `local` routes the
-    * walk through a collected snapshot (zero jobs) when present.
+  /** Walk MANY queries concurrently against one artifact (unfiltered),
+    * each from `entry`: the final beam pool (graph ids, ≤ searchSize) per
+    * query, empty when the artifact is empty. Per round the frontiers
+    * union into a single fused lookup, so a Q-query serving batch costs
+    * ~maxHops jobs in distributed mode (and zero in local mode) instead of
+    * Q× that; a single query is a batch of one. Each pool is identical to
+    * the query's walk in a batch of one (VamanaServeSpec law). `local`
+    * routes the walk through a collected snapshot (zero jobs) when
+    * present.
     */
-  def beamCandidateGids(
-      art: DataFrame, metric: Metric, query: Seq[Float],
+  def beamCandidateGidsBatch(
+      art: DataFrame, metric: Metric, queries: Seq[Seq[Float]],
       searchSize: Int, entry: Long, maxHops: Int = 64,
       local: Option[LocalGraph] = None,
-      coded: Option[graft.operators.CodedSource] = None): Seq[Long] =
-    walkBatch(access(art, None, local, coded), metric, Seq(query), searchSize,
-      entry, maxHops, filtered = false).head
+      coded: Option[graft.operators.CodedSource] = None): Seq[Seq[Long]] =
+    walkBatch(access(art, None, local, coded), metric, queries, searchSize,
+      entry, maxHops, filtered = false)
 
   /** FILTERED beam candidates — the reference's optimistic filtered
     * search (vamana/search.go:27–51, 93–95) re-expressed:
@@ -388,39 +394,15 @@ object VamanaServe {
     * Returned gids are in-filter by construction. In local mode the
     * in-filter gid set is collected once (≤ artifact size, which already
     * fit the local budget).
-    */
-  def beamCandidateGidsFiltered(
-      art: DataFrame, matchArt: DataFrame, metric: Metric, query: Seq[Float],
-      searchSize: Int, entry: Long, maxHops: Int = 64,
-      local: Option[LocalGraph] = None,
-      coded: Option[graft.operators.CodedSource] = None): Seq[Long] =
-    walkBatch(access(art, Some(matchArt), local, coded), metric, Seq(query),
-      searchSize, entry, maxHops, filtered = true).head
-
-  /** Walk MANY queries concurrently against one artifact (unfiltered):
-    * per round the frontiers union into a single fused lookup, so a
-    * Q-query serving batch costs ~maxHops jobs in distributed mode (and
-    * zero in local mode) instead of Q× that. Pools are per-query and
-    * identical to Q independent [[beamCandidateGids]] walks.
-    */
-  def beamCandidateGidsBatch(
-      art: DataFrame, metric: Metric, queries: Seq[Seq[Float]],
-      searchSize: Int, entry: Long, maxHops: Int = 64,
-      local: Option[LocalGraph] = None,
-      coded: Option[graft.operators.CodedSource] = None): Seq[Seq[Long]] =
-    walkBatch(access(art, None, local, coded), metric, queries, searchSize,
-      entry, maxHops, filtered = false)
-
-  /** The FILTERED sibling of [[beamCandidateGidsBatch]] (round-12 verdict
-    * item #8): Q optimistic filtered walks (see
-    * [[beamCandidateGidsFiltered]]) sharing ONE filter advance as a
-    * single wave. The walk machinery already shares everything
+    *
+    * Q walks share ONE filter advance as a single wave (round-12 verdict
+    * item #8). The walk machinery already shares everything
     * query-independent — the in-filter SEED set (a pure function of the
-    * filter: first `searchSize` in-filter gids ascending), the per-round
-    * fused node fetches, and the membership verdict cache (`okKnown` —
-    * a node's filter verdict holds for every query) — so only the
-    * per-query pools/frontiers differ. Pools are identical to Q
-    * independent filtered walks (VamanaServeSpec law).
+    * filter), the per-round fused node fetches, and the membership
+    * verdict cache (`okKnown` — a node's filter verdict holds for every
+    * query) — so only the per-query pools/frontiers differ. Pools are
+    * identical to each query's filtered walk in a batch of one
+    * (VamanaServeSpec law).
     */
   def beamCandidateGidsFilteredBatch(
       art: DataFrame, matchArt: DataFrame, metric: Metric,

@@ -180,7 +180,9 @@ object Similarity {
 
   /** K INDEPENDENT bounded top-k aggregations in ONE pass — the engine of
     * every fused multi-query candidate scan (QueryCompiler's
-    * compileFlatMany / compileTextMany): each input row carries a K-wide
+    * compileFlatMany / compileTextMany, through `multiTopK`, which folds
+    * each partition with `reduce` and merges the partition buffers on
+    * the driver with `merge` and `finish`): each input row carries a K-wide
     * key array (one ranking key per batched query) plus the row id, and
     * the aggregator maintains K separate top-`ks(qi)` buffers, each
     * replaying Spark's `orderBy(key asc, id asc).limit(k)` exactly (ties
@@ -191,16 +193,16 @@ object Similarity {
     * skipped — the exclusion channel for per-query IVF cell pruning
     * (rows in cells the query didn't probe), per-query text eligibility
     * (containsAll misses), and defensively for a null quantized distance
-    * (which the array encoder could not carry; the single-request route
-    * sorts such rows first — both cases are unreachable under the encode
-    * invariants, and the divergence is documented at the call sites).
+    * (which the array encoder could not carry, where Spark's `orderBy`
+    * would sort such rows first — unreachable under the encode
+    * invariants, and documented at the call site).
     *
     * Versus the previous posexplode formulation (K rows per scanned row
     * feeding [[TopKStrAgg]] through a groupBy): the input stays ONE row
     * wide regardless of K, so the scan pays no K× row inflation at the
-    * map boundary, and the aggregate is GLOBAL (no grouping shuffle at
-    * all — partials carry ≤ Σ 2·ks(qi) entries per partition). The
-    * posexplode formulation remains the law oracle in SearchManySpec.
+    * map boundary, and there is no grouping shuffle at all — a partition
+    * buffer carries ≤ Σ 2·ks(qi) entries. The posexplode formulation
+    * remains the law oracle in SearchManySpec.
     */
   final class TopKStrMultiAgg(ks: Array[Int])
       extends Aggregator[(Seq[Double], String), TopKMultiBuf, TopKMultiBuf] {
@@ -266,11 +268,17 @@ object Similarity {
       while (qi < nq) { compactRegion(b, qi); qi += 1 }
       b
     }
-    override def bufferEncoder: Encoder[TopKMultiBuf] = Encoders.product[TopKMultiBuf]
-    override def outputEncoder: Encoder[TopKMultiBuf] = Encoders.product[TopKMultiBuf]
+    override def bufferEncoder: Encoder[TopKMultiBuf] = TopKStrMultiAgg.BufEncoder
+    override def outputEncoder: Encoder[TopKMultiBuf] = TopKStrMultiAgg.BufEncoder
   }
 
   object TopKStrMultiAgg {
+    /** Derived once: deriving a product encoder takes Scala runtime
+      * reflection, and every ranked text or quantized leaf compiles one
+      * aggregator.
+      */
+    private val BufEncoder: Encoder[TopKMultiBuf] = Encoders.product[TopKMultiBuf]
+
     /** Slice a finished [[TopKMultiBuf]] (as collected Seqs) back into
       * per-query (key, id) lists, in (key asc, id asc) order.
       */

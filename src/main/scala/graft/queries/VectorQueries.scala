@@ -852,7 +852,7 @@ object VectorQueries {
     * Search.searchMany in ONE call — the group shares one
     * filter-RESTRICTED fused candidate scan (QueryCompiler.compileFlatMany
     * with the group's filter; filtered-out rows never consume candidate
-    * budget, the single route's filter-first placement), then the bounded
+    * budget, the reference's filter-first placement), then the bounded
     * per-query top-50 and the shared exact re-rank. Per-request results
     * equal independent searches (SearchManySpec equal-filter flat law);
     * the oracle replays the whole pipeline per query with the filter as

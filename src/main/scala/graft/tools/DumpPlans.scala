@@ -6,21 +6,26 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dump the plans of named registry gates — the evidence for plan-shape
   * claims (plans/<round>/...).
   *
   * Usage: `runMain graft.tools.DumpPlans <outDir> <suffix> <name> [name ...]`
   * (sf dir from SPARK_GRAFT_SF_DIR, session from [[graft.Sessions]], so
-  * the dumped plans are the plans the bench runs). Each gate runs through
-  * the noop sink — every column of every row computed, nothing collected —
-  * and `<outDir>/<name>_<suffix>.txt` holds its optimized logical plan,
-  * its initial physical plan, and the final plan the write executed
-  * (`AdaptiveSparkPlan isFinalPlan=true` where the plan is adaptive: AQE's
-  * runtime rewrites, such as sort-merge to shuffled-hash joins, show only
-  * there). A gate that fails still gets a file with the error, so a dump
-  * over a historical commit cannot silently skip a gate missing there.
+  * the dumped plans are the plans the bench runs). `<outDir>/<name>_<suffix>.txt`
+  * holds, in order:
+  *   - the executed plan of every Dataset action the gate ran while it
+  *     built its frame (a search's ranked-leaf folds, the Vamana walk's
+  *     point reads, a merge's collects), captured by
+  *     [[Bridge.captureExecutions]];
+  *   - the frame's optimized logical plan and initial physical plan;
+  *   - the final plan of the frame's run through the noop sink — every
+  *     column of every row computed, nothing collected — which the write
+  *     plans afresh (`AdaptiveSparkPlan isFinalPlan=true` where the plan
+  *     is adaptive: AQE's runtime rewrites, such as sort-merge to
+  *     shuffled-hash joins, show only there).
+  * A gate that fails still gets a file with the error, so a dump over a
+  * historical commit cannot silently skip a gate missing there.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -38,13 +43,18 @@ object DumpPlans {
     names.map { name =>
       val body =
         try {
-          val df = graft.SparkEntry.queries(name)(spark, sfDir)
+          val (df, actions) =
+            Bridge.captureExecutions(spark)(graft.SparkEntry.queries(name)(spark, sfDir))
+          val built = actions.zipWithIndex.flatMap { case (qe, i) =>
+            Seq(s"== Action ${i + 1} of ${actions.size} (building the frame) ==",
+              qe.executedPlan.treeString)
+          }
           val qe = df.queryExecution
-          Seq(
+          (built ++ Seq(
             "== Optimized Logical Plan ==", qe.optimizedPlan.treeString,
             "== Initial Physical Plan ==", qe.executedPlan.treeString,
             "== Final Physical Plan ==", executedThroughNoop(df).executedPlan.treeString
-          ).mkString("\n")
+          )).mkString("\n")
         } catch {
           case e: Throwable => s"FAILED: $e"
         }
@@ -59,19 +69,9 @@ object DumpPlans {
     * QueryExecution: the write plans its query afresh, so only its plan
     * shows what actually ran.
     */
-  private def executedThroughNoop(df: org.apache.spark.sql.DataFrame): QueryExecution = {
-    val spark = df.sparkSession
-    @volatile var write: Option[QueryExecution] = None
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.isInstanceOf[V2WriteCommand]) write = Some(qe)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+  private def executedThroughNoop(df: org.apache.spark.sql.DataFrame): QueryExecution =
+    Bridge.captureExecutions(df.sparkSession) {
       df.write.format("noop").mode("overwrite").save()
-      Bridge.drainListeners(spark)
-    } finally spark.listenerManager.unregister(listener)
-    write.getOrElse(sys.error("the noop write reported no query execution"))
-  }
+    }._2.find(_.analyzed.isInstanceOf[V2WriteCommand])
+      .getOrElse(sys.error("the noop write reported no query execution"))
 }

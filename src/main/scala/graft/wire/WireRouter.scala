@@ -476,9 +476,10 @@ final class WireRouter(db: graft.Graft,
 
   /** Batch search (beyond the reference): `{"requests":[<search body>…]}`
     * → `{"results":[{"points":[…]}, …]}` in request order. The facade's
-    * searchMany fuses the batch's batchable requests (engine
-    * Search.searchMany): graph-served requests walk as ONE hop-fused
-    * wave, and full-scan flat requests share ONE multi-query candidate
+    * searchMany compiles every batchable leaf of the batch through its
+    * family's batch route (engine Search.searchMany): graph-served leaves
+    * walk as ONE hop-fused wave, quantized flat leaves share ONE
+    * multi-query candidate scan, and text leaves share one postings
     * scan — so a K-query serving batch pays ~one request's heavy work
     * instead of K×. Each element is a complete v2
     * search body (the single-request codec, reused verbatim); a malformed

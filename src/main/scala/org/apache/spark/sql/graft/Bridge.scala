@@ -114,4 +114,33 @@ object Bridge {
     */
   def drainListeners(session: org.apache.spark.sql.SparkSession): Unit =
     session.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Run `f`; return its result and the QueryExecution of every Dataset
+    * action that completed while it ran, in completion order. It listens
+    * to the SQL-execution-end event that drives query-execution
+    * listeners, but on the whole context: a session's listeners see only
+    * that session, and the Vamana walk fetches under a cloned one. Drains
+    * the listener bus ([[drainListeners]]) before returning.
+    */
+  def captureExecutions[A](session: org.apache.spark.sql.SparkSession)(
+      f: => A): (A, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case end: SparkListenerSQLExecutionEnd
+              if end.qe != null && end.executionFailure.isEmpty => seen.add(end.qe)
+          case _ => ()
+        }
+    }
+    val sc = session.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      drainListeners(session)
+      (r, seen.toArray(Array.empty[org.apache.spark.sql.execution.QueryExecution]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

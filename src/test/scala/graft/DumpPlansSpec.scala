@@ -18,4 +18,16 @@ class DumpPlansSpec extends SparkSuite {
     assert(initial.contains("AdaptiveSparkPlan isFinalPlan=false"), initial)
     assert(last.contains("AdaptiveSparkPlan isFinalPlan=true"), last)
   }
+
+  test("DumpPlans writes the plan of every action a gate runs while building its frame") {
+    val dir = Fs.tempDir("graft_dump_actions_")
+    val Seq(f) = tools.DumpPlans.dump(spark, sf0001, dir, "t", Seq("s3_text_many"))
+    val text = new String(Files.readAllBytes(f), UTF_8)
+    assert(!text.contains("FAILED"), text)
+    // the text group's top-k fold runs while the frame is built, and its
+    // plan comes before the frame's own
+    val (first, optimized) = (text.indexOf("== Action 1 of "), text.indexOf("== Optimized"))
+    assert(first >= 0 && first < optimized, text)
+    assert(text.substring(first, optimized).contains("MapPartitions"), text)
+  }
 }

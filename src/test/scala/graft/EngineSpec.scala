@@ -162,27 +162,42 @@ class EngineSpec extends SparkSuite {
     // budget = max(5·limit, 50) = 50 < 100 rows: stage 1 really narrows.
     // On this linear fixture sign-bit hamming preserves the ordering well
     // enough that the exact re-rank restores the true top-k.
-    val th = BinaryQuantizer.fit(fixture.df, col("flat"), 2)
-    val withIdx = fixture.withBinaryVectorIndex("flat", th)
+    // served from a parquet scan, as a stored collection is: over the
+    // in-memory fixture Spark folds the whole re-rank of the collected
+    // candidates into one LocalTableScan, and the plan laws below would
+    // see nothing
+    val dir = Fs.tempDir("graft_engine_bq_").resolve("docs").toString
+    fixture.df.write.parquet(dir)
+    val scanned = fixture.copy(df = spark.read.parquet(dir))
+    val th = BinaryQuantizer.fit(scanned.df, col("flat"), 2)
+    val withIdx = scanned.withBinaryVectorIndex("flat", th)
     val req = SearchRequest(
       Query("flat", vectorFlat = Some(VectorFlatOpts(
         Seq(5f, 6f), Op.Near, 10, approx = true))), limit = 100)
     val exact = Search.search(fixture, SearchRequest(
       Query("flat", vectorFlat = Some(VectorFlatOpts(Seq(5f, 6f), Op.Near, 10))),
       limit = 100)).collect()
-    val approx = Search.search(withIdx, req)
-    // the candidate stage is visible in the plan: quantized order key over
-    // the encoded frame ranked by a PARTIAL top-k (TakeOrderedAndProject —
+    val (approx, execs) = captureExecutions(Search.search(withIdx, req))
+    // the candidate stage ran while compiling, as ONE fold: the quantized
+    // key array over the encoded frame's packed bits, per-partition top-k
+    // buffers merged on the driver — one stage, so no exchange and never
+    // a global sort
+    val folds = topKFolds(execs)
+    assert(folds.size == 1, execs.map(_.executedPlan).mkString("\n"))
+    val fold = folds.head.toString
+    assert(fold.contains("_qds") && fold.contains("_packed"), fold)
+    assert(!fold.contains("rangepartitioning"), fold)
+    assert(exchanges(folds.head).isEmpty, fold)
+    // the returned re-rank is a PARTIAL top-k (TakeOrderedAndProject —
     // per-partition heads + driver merge, never a global sort shuffle)
     val physical = approx.queryExecution.executedPlan.toString
-    assert(physical.contains("_qd"), physical)
     assert(physical.contains("TakeOrderedAndProject"), physical)
     // at most ONE Sort, and only as the outermost result ordering: the
     // metadata-only shortcut returns the bounded ranked frame directly,
     // and EliminateLimits drops the request limit over it (child max rows
     // ≤ limit), so the default hybrid ordering stays a Sort of ≤ limit
     // rows instead of folding into TakeOrderedAndProject. Below it the
-    // law keeps its teeth: candidate and re-rank top-ks must stay
+    // law keeps its teeth: the re-rank top-k must stay
     // TakeOrderedAndProject and every join broadcast — a sort-merge join
     // or a corpus-level sort would add Sort nodes UNDER the join/scan and
     // trip the at-most-one / above-all-joins assertions.

@@ -6,7 +6,8 @@ import graft.model._
 
 /** Laws for the batch-amortized serving face (round-11 verdict item #4):
   * Search.searchMany must be REQUEST-FOR-REQUEST identical to K
-  * independent Search.search calls — the batch is a cost optimization
+  * independent Search.search calls (each a batch of one), and its text
+  * scores equal a driver-side brute-force tf-idf — the batch is a cost optimization
   * (one hop-fused walk wave + one fused gid→id lookup per group), never a
   * semantics change — across batchable requests, non-batchable fallbacks,
   * and mixed batches.
@@ -200,9 +201,9 @@ class SearchManySpec extends SparkSuite {
   test("flat searchMany fuses SPILLED IVF-PQ requests (per-id min dedup preserved)") {
     val base = queries.TestCollections.docs(spark, sf0001)
     val dir = Fs.tempDir("graft_ivfpq_many_").toString
-    // spill=2 stores ids in TWO cells: the batched route must keep the
-    // single route's per-id min-quantized-distance dedup, or duplicate
-    // candidates would burn budget slots and drift the candidate set
+    // spill=2 stores ids in TWO cells: the fused scan must keep its per-id
+    // min-quantized-distance dedup, or duplicate candidates would burn
+    // budget slots and drift the candidate set
     val coll = base.withIvfPqVectorIndex(
       "embedding", dir,
       () => graft.operators.IvfPq.kmeansCoarse(base.df, col("embedding"), k = 16),
@@ -225,16 +226,66 @@ class SearchManySpec extends SparkSuite {
       filter = filter, weight = weight))), limit = 100)
 
   /** Text scores compare ROUNDED to 4 decimals (the gates' own claim
-    * strength): batch and single routes sum the identical per-term
-    * doubles but in potentially different orders inside their groupBys,
-    * and while the float32 cast absorbs the ulp in practice, exact
-    * bitwise equality of a reordered double sum is not a law either
-    * route promises.
+    * strength): a K-batch, a batch of one and the brute force sum the
+    * identical per-term doubles but in potentially different orders, and
+    * while the float32 cast absorbs the ulp in practice, exact bitwise
+    * equality of a reordered double sum is not a law the engine promises.
     */
   private def textRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select(col("_id"), round(col("_score").cast("double"), 4).cast("string"),
       round(col("_hybridScore").cast("double"), 4).cast("string"))
       .collect().map(_.mkString("|")).sorted.toSeq
+
+  /** The fixture's text corpus analyzed on the driver, with the
+    * properties the text laws filter on: (id, terms, lang, n_chars) per
+    * document with non-null text — the documents the index counts.
+    */
+  private lazy val corpus: Seq[(String, Seq[String], String, Long)] =
+    coll.df.filter(col("text").isNotNull)
+      .select(col("_id"), col("text"), col("lang"), col("n_chars").cast("long"))
+      .collect().toSeq.map(r => (r.getString(0),
+        graft.functions.TextAnalyzer.analyzeString(r.getString(1)),
+        r.getString(2), if (r.isNullAt(3)) Long.MinValue else r.getLong(3)))
+
+  /** The laws' filters, evaluated on the driver: a case-insensitive `lang`
+    * equality (the fixture's `lang` index is case-insensitive) or an
+    * `n_chars` lower bound.
+    */
+  private def passes(f: Query, doc: (String, Seq[String], String, Long)): Boolean =
+    (f.property, f.string, f.integer) match {
+      case ("lang", Some(StringOpts(v, Op.Equals, _)), _) =>
+        doc._3 != null && doc._3.toLowerCase == v.toLowerCase
+      case ("n_chars", _, Some(IntegerOpts(v, Op.GreaterThan, _))) => doc._4 > v
+      case _ => fail(s"no driver-side evaluator for filter $f")
+    }
+
+  /** Brute-force tf-idf for one text request, independent of the engine's
+    * index and plans: score = Σ over the query's distinct terms in the doc
+    * of (f/len)·log10(N/(df+1)), N and df over every document with text;
+    * containsAll needs every term, containsAny one; the filter narrows the
+    * candidates, not the statistics; rank by (float32 score desc, id asc),
+    * keep `limit`; hybrid = score32 · weight. Rendered like [[textRows]].
+    */
+  private def textExpected(r: SearchRequest): Seq[String] = {
+    import spark.implicits._
+    val o = r.query.text.get
+    val terms = graft.functions.TextAnalyzer.analyzeString(o.value).distinct
+    val n = corpus.size.toDouble
+    val df = corpus.flatMap(_._2.distinct).groupMapReduce(identity)(_ => 1L)(_ + _)
+    val w = o.weight.getOrElse(1.0f)
+    val ranked = corpus.flatMap { doc =>
+      val (id, toks, _, _) = doc
+      val freq = toks.groupMapReduce(identity)(_ => 1)(_ + _)
+      val hits = terms.filter(freq.contains)
+      val eligible = if (o.operator == Op.ContainsAll) hits.size == terms.size else hits.nonEmpty
+      if (!eligible || !o.filter.forall(passes(_, doc))) None
+      else Some(id -> hits.map(t =>
+        freq(t).toDouble / toks.size * math.log10(n / (df(t) + 1.0))).sum.toFloat)
+    }.sortWith { case ((ia, sa), (ib, sb)) => sa > sb || (sa == sb && ia < ib) }
+      .take(o.limit)
+    textRows(ranked.map { case (id, s) => (id, s, s * w) }
+      .toDF("_id", "_score", "_hybridScore"))
+  }
 
   test("text searchMany == K independent searches (shared postings/df scan)") {
     val reqs = Seq(
@@ -244,7 +295,10 @@ class SearchManySpec extends SparkSuite {
       textReq("spark", Op.ContainsAny, limit = 3))
     val batch = Search.searchMany(coll, reqs)
     reqs.zip(batch).foreach { case (r, df) =>
-      assert(textRows(df) == textRows(Search.search(coll, r)), s"text drift for $r")
+      val got = textRows(df)
+      assert(got.nonEmpty, s"no rows for $r")
+      assert(got == textExpected(r), s"text drift from brute force for $r")
+      assert(got == textRows(Search.search(coll, r)), s"text drift for $r")
     }
   }
 
@@ -253,7 +307,7 @@ class SearchManySpec extends SparkSuite {
     val nc = Some(Query("n_chars", integer = Some(IntegerOpts(200, Op.GreaterThan))))
     // two EQUAL-filter requests share one intersected fused frame; the
     // different-filter and unfiltered requests land in their own groups —
-    // all must equal their independent single-request twins
+    // all must equal the brute-force scores and their batches of one
     val reqs = Seq(
       textReq("vector table", Op.ContainsAny, filter = de),
       textReq("spark filter merge", Op.ContainsAny, limit = 7, filter = de),
@@ -261,7 +315,10 @@ class SearchManySpec extends SparkSuite {
       textReq("spark window", Op.ContainsAll))
     val batch = Search.searchMany(coll, reqs)
     reqs.zip(batch).foreach { case (r, df) =>
-      assert(textRows(df) == textRows(Search.search(coll, r)), s"filtered text drift for $r")
+      val got = textRows(df)
+      assert(got.nonEmpty, s"no rows for $r")
+      assert(got == textExpected(r), s"filtered text drift from brute force for $r")
+      assert(got == textRows(Search.search(coll, r)), s"filtered text drift for $r")
     }
   }
 

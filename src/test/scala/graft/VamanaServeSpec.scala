@@ -31,12 +31,12 @@ class VamanaServeSpec extends SparkSuite {
 
   test("local fast path pool == distributed walk pool (unfiltered)") {
     qvecs.foreach { q =>
-      val dist = VamanaServe.beamCandidateGids(
-        art, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = None)
-      val loc = VamanaServe.beamCandidateGids(
-        art, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = localGraph)
+      val dist = VamanaServe.beamCandidateGidsBatch(
+        art, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = None).head
+      val loc = VamanaServe.beamCandidateGidsBatch(
+        art, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = localGraph).head
       assert(loc == dist, s"pool mismatch for query ${q.take(3)}…")
       assert(loc.nonEmpty && loc.size <= 75)
     }
@@ -48,21 +48,21 @@ class VamanaServeSpec extends SparkSuite {
     for (m <- Seq(art.filter(col("_gid") % 29 === 0), // ≤ searchSize: all seeded
                   art.filter(col("_gid") % 2 === 0))) { // half the corpus
       val q = qvecs.head
-      val dist = VamanaServe.beamCandidateGidsFiltered(
-        art, m, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = None)
-      val loc = VamanaServe.beamCandidateGidsFiltered(
-        art, m, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = localGraph)
+      val dist = VamanaServe.beamCandidateGidsFilteredBatch(
+        art, m, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = None).head
+      val loc = VamanaServe.beamCandidateGidsFilteredBatch(
+        art, m, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = localGraph).head
       assert(loc == dist)
       assert(loc.nonEmpty)
     }
   }
 
   test("batched multi-query walk == independent single walks (both regimes)") {
-    val singles = qvecs.map(q => VamanaServe.beamCandidateGids(
-      art, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-      maxHops = idx.maxHops, local = localGraph))
+    val singles = qvecs.map(q => VamanaServe.beamCandidateGidsBatch(
+      art, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+      maxHops = idx.maxHops, local = localGraph).head)
     for (lg <- Seq(None, localGraph)) {
       val batch = VamanaServe.beamCandidateGidsBatch(
         art, Metric.Euclidean, qvecs, searchSize = 75, entry = idx.entry,
@@ -80,12 +80,12 @@ class VamanaServeSpec extends SparkSuite {
     // one throwaway walk first: plan caches / walk-session clone / codegen
     // are one-time costs that would otherwise land in whichever side runs
     // first
-    VamanaServe.beamCandidateGids(art, Metric.Euclidean, qvecs.head,
+    VamanaServe.beamCandidateGidsBatch(art, Metric.Euclidean, Seq(qvecs.head),
       searchSize = 75, entry = idx.entry, maxHops = idx.maxHops, local = None)
     val (singles, nSingles) = countJobs("graft-sublinear-singles") {
-      qvecs.map(q => VamanaServe.beamCandidateGids(
-        art, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = None))
+      qvecs.map(q => VamanaServe.beamCandidateGidsBatch(
+        art, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = None).head)
     }
     val (batch, nBatch) = countJobs("graft-sublinear-batch") {
       VamanaServe.beamCandidateGidsBatch(
@@ -144,9 +144,6 @@ class VamanaServeSpec extends SparkSuite {
 
   test("a warmed text leaf over a built index is one Spark job with no exchange; so is its hybrid") {
     import model._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    object plans extends AdaptiveSparkPlanHelper
     // the fixture's text index is the parquet-cached build; install the
     // in-memory one the facade builds, partitioned by _id
     val built = engine.TextIndex.build(coll.df, "text")
@@ -163,16 +160,18 @@ class VamanaServeSpec extends SparkSuite {
       }
       // warmed: the graph snapshot and the postings cache
       run(hybrid); run(SearchRequest(text, limit = 10))
-      val ((df, rows), textJobs) = countJobs("graft-text-leaf")(run(SearchRequest(text, limit = 10)))
-      assert(rows.nonEmpty)
-      // df is a literal lookup; the per-doc aggregate reads postings
-      // already hash-partitioned by _id
-      assert(textJobs == 1, s"the text leaf ran $textJobs jobs")
-      val exchanges = plans.collect(df.queryExecution.executedPlan) {
-        case e: ShuffleExchangeExec => e
-        case e: BroadcastExchangeExec => e
+      val (((_, rows), execs), textJobs) = countJobs("graft-text-leaf") {
+        captureExecutions(run(SearchRequest(text, limit = 10)))
       }
-      assert(exchanges.isEmpty, df.queryExecution.executedPlan)
+      assert(rows.nonEmpty)
+      // df is a literal lookup, the per-doc aggregate reads postings
+      // already hash-partitioned by _id, and the top-k folds in the same
+      // stage: the leaf's fold is the request's one job
+      assert(textJobs == 1, s"the text leaf ran $textJobs jobs")
+      assert(topKFolds(execs).size == 1, execs.map(_.executedPlan).mkString("\n"))
+      // no action of the request — the fold, or the collect of the
+      // driver-local answer — exchanges anything
+      execs.foreach(qe => assert(exchanges(qe.executedPlan).isEmpty, qe.executedPlan))
       // the same answer as the parquet-cached index gives
       assert(rows == engine.Search.search(coll, SearchRequest(text, limit = 10)).collect().toSeq)
       val (_, hybridJobs) = countJobs("graft-text-hybrid")(run(hybrid))
@@ -217,12 +216,12 @@ class VamanaServeSpec extends SparkSuite {
         s"expected one file per bucket, saw $totalFiles files for ${m.group(2)} buckets")
       // and the walk over the bucketed table computes the IDENTICAL pool
       qvecs.foreach { q =>
-        val viaBuckets = VamanaServe.beamCandidateGids(
-          serving, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-          maxHops = idx.maxHops, local = None)
-        val viaLocal = VamanaServe.beamCandidateGids(
-          art, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-          maxHops = idx.maxHops, local = localGraph)
+        val viaBuckets = VamanaServe.beamCandidateGidsBatch(
+          serving, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+          maxHops = idx.maxHops, local = None).head
+        val viaLocal = VamanaServe.beamCandidateGidsBatch(
+          art, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+          maxHops = idx.maxHops, local = localGraph).head
         assert(viaBuckets == viaLocal)
       }
     } finally {
@@ -304,19 +303,19 @@ class VamanaServeSpec extends SparkSuite {
       // identical pool to the exact walk under the same filter
       val narrowC = cart.filter(col("_gid") % 29 === 0)
       val narrowE = art.filter(col("_gid") % 29 === 0)
-      val codedPool = VamanaServe.beamCandidateGidsFiltered(
-        cart, narrowC, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = None, coded = Some(graft.operators.PqCodes(pq)))
-      val exactPool = VamanaServe.beamCandidateGidsFiltered(
-        art, narrowE, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = localGraph)
+      val codedPool = VamanaServe.beamCandidateGidsFilteredBatch(
+        cart, narrowC, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = None, coded = Some(graft.operators.PqCodes(pq))).head
+      val exactPool = VamanaServe.beamCandidateGidsFilteredBatch(
+        art, narrowE, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = localGraph).head
       assert(codedPool.toSet == exactPool.toSet,
         s"narrow-filter pools must agree: $codedPool vs $exactPool")
       // broad filter: every returned gid is in-filter
       val broad = cart.filter(col("_gid") % 2 === 0)
-      val broadPool = VamanaServe.beamCandidateGidsFiltered(
-        cart, broad, Metric.Euclidean, q, searchSize = 75, entry = idx.entry,
-        maxHops = idx.maxHops, local = None, coded = Some(graft.operators.PqCodes(pq)))
+      val broadPool = VamanaServe.beamCandidateGidsFilteredBatch(
+        cart, broad, Metric.Euclidean, Seq(q), searchSize = 75, entry = idx.entry,
+        maxHops = idx.maxHops, local = None, coded = Some(graft.operators.PqCodes(pq))).head
       assert(broadPool.nonEmpty && broadPool.forall(_ % 2 == 0), broadPool)
     } finally {
       spark.conf.unset("graft.vamana.localMaxBytes")
